@@ -27,18 +27,18 @@ HID_DIMS = 100  # main.py --hid_dims default
 N_RELS = 3  # 3-relation ment-norm model (mulrel-nel/README.md:33)
 
 
-# lru_cache: both codes are recomputed per occurrence inside the hot
-# applyInPandas loops (every window token / every candidate of every
-# mention); token and entity vocabularies are Zipfian, so a bounded
-# memo turns ~all of those md5 calls into dict hits. Caches live per
-# Python worker and survive across Arrow batches.
+# lru_cache: word codes are recomputed per occurrence inside the hot
+# applyInPandas window loop (every token of every window); the token
+# vocabulary is Zipfian, so a bounded memo turns ~all of those md5 calls
+# into dict hits. The cache lives per Python worker and survives across
+# Arrow batches.
 @lru_cache(maxsize=1 << 18)
 def word_code(token: str) -> int:
     return int(hashlib.md5(token.encode()).hexdigest()[:6], 16)
 
 
-@lru_cache(maxsize=1 << 18)
 def ent_code(ent_name: str) -> int:
+    """Python twin of the KB's ``ent_id`` (``synth.ent_id_col``)."""
     return int(hashlib.md5(ent_name.encode()).hexdigest()[:8], 16)
 
 

@@ -76,24 +76,31 @@ def write_stage(
         df.write.mode("overwrite").parquet(data_path(root, stage))
         written = spark.read.parquet(data_path(root, stage))
 
-    # per-partition metrics over the data *as persisted* (scan partitioning),
-    # plus a totals row — one aggregation job, no collect loop
-    part_counts = (
+    # per-partition metrics over the data *as persisted* (scan partitioning):
+    # one aggregation job whose result is at most one row per scan
+    # partition; the totals row is summed from those collected rows, so an
+    # *empty* stage still records its (stage, -1, 0) row — empty-but-complete
+    part_rows = (
         written.groupBy(F.spark_partition_id().alias("partition_id"))
         .agg(F.count(F.lit(1)).alias("rows"))
-        .select(F.lit(stage).alias("stage"), "partition_id", "rows")
+        .collect()
     )
-    # global aggregate (not groupBy) so an *empty* stage still yields its
-    # (stage, -1, 0) totals row — lineage must record empty-but-complete
-    totals = part_counts.agg(
-        F.coalesce(F.sum("rows"), F.lit(0)).cast("long").alias("rows")
-    ).select(
-        F.lit(stage).alias("stage"), F.lit(-1).alias("partition_id"), "rows"
-    )
-    metrics = part_counts.unionByName(totals).orderBy("partition_id")
-    metrics.write.mode("overwrite").parquet(f"{root}/{stage}/_metrics")
-    totals_row = metrics.where(F.col("partition_id") == -1).select("rows").first()
-    n_rows = int(totals_row[0]) if totals_row is not None else 0
+    n_rows = sum(r["rows"] for r in part_rows)
+    metrics = sorted([(r["partition_id"], r["rows"]) for r in part_rows] + [(-1, n_rows)])
+    # rows as JVM literals: createDataFrame on a Python list ships it
+    # through the Python serializer as a parallelized RDD, which costs more
+    # than the whole aggregation job
+    structs = [
+        F.struct(
+            F.lit(stage).alias("stage"),
+            F.lit(pid).cast("int").alias("partition_id"),
+            F.lit(n).cast("long").alias("rows"),
+        )
+        for pid, n in metrics
+    ]
+    spark.range(1, numPartitions=1).select(F.inline(F.array(*structs))).write.mode(
+        "overwrite"
+    ).parquet(f"{root}/{stage}/_metrics")
 
     record = {
         "stage": stage,

@@ -1,26 +1,36 @@
-"""Candidate generation: the KB alias join (J1) + prior-argmax linking (T7).
+"""Candidate generation: the one KB alias join (J1) + prior-argmax linking (T7).
 
 The reference probes an in-memory dict `ent_p_e_m_index[mention]`
 (`mulrel-nel/nel/dataset.py` callers; index built at
-`yago_crosswikis_wiki.py:15-36`). In Spark the dictionary is a DataFrame,
-and the probe is a join whose physical strategy is **selected by KB size**
-(the north rule's broadcast-vs-shuffle selection):
+`yago_crosswikis_wiki.py:15-36`). In Spark the dictionary is the KB alias
+table (one row per surface and candidate) or its one per-surface roll-up,
+:func:`candidate_arrays` (the candidates' ``ent_id`` / ``ent_name`` /
+``prior`` arrays in rank order), and the probe is one left join
+(:func:`_join`) whose physical strategy is **selected by the KB side's
+size**:
 
-* KB fits in executor memory → **broadcast hash join**: the mention stream
+* fits in executor memory → **broadcast hash join**: the mention stream
   never shuffles, which is the plan we want at 10^12 turns.
-* KB too large to broadcast (a full cross-wiki alias table can reach tens
+* too large to broadcast (a full cross-wiki alias table can reach tens
   of GB) → **salted shuffle-hash join**: head surface forms ("the", brand
   names, viral hashtags) concentrate mention traffic on a few keys, so a
   plain shuffle join sends every occurrence of a hot mention to one
   reducer. Salting the probe side with a uniform per-occurrence salt and
   replicating the KB rows across all salt values splits each hot key into
-  ``salt_buckets`` independent reducers, at the cost of a bounded
-  ``salt_buckets×`` blow-up of the (dim-sized) KB shuffle — the standard
+  ``SALT_BUCKETS`` independent reducers, at the cost of a bounded
+  ``SALT_BUCKETS×`` blow-up of the (dim-sized) KB shuffle — the standard
   skew trade. AQE's skew-join splitting stays on as a second line of
   defense for residual imbalance.
 
+Every linker goes through that join: :func:`attach_candidates` joins the
+candidate table (array form: embedding and cosine linkers, hyperlink and
+tweet-context emitters, which cap it with ``F.slice``); :func:`gen_candidates`
+joins the KB rows themselves (row form: prior linker, daily ingest,
+streaming — one row per candidate is what they consume, and a per-call
+roll-up would cost each daily increment an extra shuffle).
+
 A left join preserves the EMPTYCAND path (`gen_aida_test.py:198-203`):
-unmatched mentions surface with NULL candidate and become NIL predictions
+unmatched mentions surface with NULL candidates and become NIL predictions
 downstream — every mention occurrence carries exactly one salt value, so
 the salted left join emits exactly one NULL row for them too.
 """
@@ -29,16 +39,17 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, MapType, StructType
 
-# Above this estimated KB size, `auto` stops broadcasting. Matches the
-# session's autoBroadcastJoinThreshold scaled to leave headroom for the
+# Above this estimated candidate-table size, J1 stops broadcasting. Matches
+# the session's autoBroadcastJoinThreshold scaled to leave headroom for the
 # executor heap share a broadcast relation occupies (deserialized, per
 # executor, alongside the hash relation built from it).
 BROADCAST_LIMIT_BYTES = 64 * 1024 * 1024
 
 # Salt fan-out for the shuffle path: each hot mention key splits across
 # this many reducers. KB shuffle volume grows by the same factor, so keep
-# it a small constant (a 4N-executor step can raise it via the parameter).
+# it a small constant.
 SALT_BUCKETS = 8
 
 _OUT_COLS = (
@@ -54,64 +65,85 @@ _OUT_COLS = (
 )
 
 
-def _kb_size_estimate(kb_df: DataFrame) -> int:
+def _size_estimate(df: DataFrame) -> int:
     """Catalyst's optimized-plan size estimate in bytes (no job is run —
     for parquet sources this derives from file footers/statistics, the same
     signal autoBroadcastJoinThreshold uses)."""
     try:
-        return int(kb_df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     except Exception:  # py4j hiccup → conservative: too big to broadcast
         return 1 << 62
+
+
+def candidate_arrays(kb_df: DataFrame) -> DataFrame:
+    """The KB-side candidate table: one row per ``mention`` with
+    ``cand_ids``, ``cand_names`` and ``cand_priors`` in rank order (prior
+    desc / ent_name asc — the reference sorts candidates by count desc with
+    Python's stable sort, `merge_crosswikis_wiki.py:91-92`).
+
+    Rolled up on the *small* side (|KB| rows → |distinct surface| rows), so
+    the mention stream joins one row per key and never regroups."""
+    c = F.sort_array(F.collect_list(F.struct("rank", "ent_id", "ent_name", "prior")))
+    return kb_df.groupBy("mention").agg(c.alias("c")).select(
+        "mention",
+        F.col("c.ent_id").alias("cand_ids"),
+        F.col("c.ent_name").alias("cand_names"),
+        F.col("c.prior").alias("cand_priors"),
+    )
+
+
+def _join(mentions_df: DataFrame, kb_side: DataFrame, broadcast_limit_bytes: int) -> DataFrame:
+    """J1: ``mentions_df`` LEFT JOIN a ``mention``-keyed KB-side table,
+    broadcast iff its size estimate fits ``broadcast_limit_bytes``, salted
+    shuffle-hash otherwise. Both arms produce identical rows."""
+    if _size_estimate(kb_side) <= broadcast_limit_bytes:
+        return mentions_df.join(F.broadcast(kb_side), on="mention", how="left")
+    # Uniform deterministic salt per mention *occurrence* (not per surface
+    # form — that is the whole point: occurrences of one hot mention spread
+    # over all buckets): a hash of the probe row's scalar columns, which
+    # carry the occurrence key (conv/turn/position, tweet/ordinal, ...).
+    scalars = [
+        f.name
+        for f in mentions_df.schema.fields
+        if not isinstance(f.dataType, (ArrayType, MapType, StructType))
+    ]
+    salt = F.pmod(F.xxhash64(*scalars), F.lit(SALT_BUCKETS)).cast("int")
+    build = kb_side.withColumn(
+        "_salt", F.explode(F.sequence(F.lit(0), F.lit(SALT_BUCKETS - 1)))
+    )
+    # shuffle_hash: per-salt build side is dim-sized — hashing it beats
+    # sorting the (huge) probe side, which sort-merge would require.
+    return (
+        mentions_df.withColumn("_salt", salt)
+        .join(build.hint("shuffle_hash"), on=["mention", "_salt"], how="left")
+        .drop("_salt")
+    )
+
+
+def attach_candidates(
+    mentions_df: DataFrame,
+    kb_df: DataFrame,
+    broadcast_limit_bytes: int = BROADCAST_LIMIT_BYTES,
+) -> DataFrame:
+    """Array form of J1: every ``mentions_df`` row plus its surface's
+    ``cand_ids`` / ``cand_names`` / ``cand_priors`` (NULL when the KB has
+    no such surface)."""
+    return _join(mentions_df, candidate_arrays(kb_df), broadcast_limit_bytes)
 
 
 def gen_candidates(
     mentions_df: DataFrame,
     kb_df: DataFrame,
-    strategy: str = "auto",
     broadcast_limit_bytes: int = BROADCAST_LIMIT_BYTES,
-    salt_buckets: int = SALT_BUCKETS,
 ) -> DataFrame:
-    """One output row per (mention occurrence, candidate), ranked by prior.
+    """Row form of J1: one output row per (mention occurrence, candidate),
+    the KB's own rows joined as they are (no roll-up to pay per call).
 
     Columns: conv_id, turn_idx, mention_idx, mention, ent_id, ent_name,
-    prior, rank (1-based, prior desc / ent_name asc — the reference sorts
-    candidates by count desc with Python's stable sort,
-    `merge_crosswikis_wiki.py:91-92`).
-
-    ``strategy``: ``"broadcast"`` | ``"shuffle_salted"`` | ``"auto"``
-    (broadcast iff the KB's Catalyst size estimate fits
-    ``broadcast_limit_bytes``). All strategies produce identical rows.
-    """
-    if strategy == "auto":
-        strategy = (
-            "broadcast"
-            if _kb_size_estimate(kb_df) <= broadcast_limit_bytes
-            else "shuffle_salted"
-        )
-    if strategy == "broadcast":
-        joined = mentions_df.join(F.broadcast(kb_df), on="mention", how="left")
-    elif strategy == "shuffle_salted":
-        # Uniform deterministic salt per mention *occurrence* (not per
-        # surface form — that is the whole point: occurrences of one hot
-        # mention spread over all buckets).
-        probe = mentions_df.withColumn(
-            "_salt",
-            F.pmod(
-                F.xxhash64("conv_id", "turn_idx", "mention_idx"),
-                F.lit(salt_buckets),
-            ).cast("int"),
-        )
-        build = kb_df.withColumn(
-            "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1)))
-        )
-        # shuffle_hash: per-salt build side is dim-sized — hashing it beats
-        # sorting the (huge) probe side, which sort-merge would require.
-        joined = probe.join(
-            build.hint("shuffle_hash"), on=["mention", "_salt"], how="left"
-        )
-    else:
-        raise ValueError(f"unknown strategy {strategy!r}")
-    return joined.select(*_OUT_COLS)
+    prior, rank (1-based, prior desc / ent_name asc), doc_id; one all-NULL
+    candidate row for a mention the KB does not know."""
+    kb_rows = kb_df.select("mention", "ent_id", "ent_name", "prior", "rank")
+    return _join(mentions_df, kb_rows, broadcast_limit_bytes).select(*_OUT_COLS)
 
 
 def link_prior_argmax(candidates_df: DataFrame) -> DataFrame:

@@ -10,10 +10,11 @@ Scale shape (the linker.py pattern, no driver-side state):
 * mention detection, word-id coding (md5[:6] mod n) and the ±25 turn-local
   context slices are **pure JVM column algebra** — posexplode + transform +
   slice, whole-stage codegen, no Python;
-* the candidate table is pre-aggregated **KB-side** into per-surface arrays
-  (names, md5[:8] codes, priors — all computed in the JVM) and attached via
-  a broadcast hash join, so the 10^12-row mention stream never shuffles and
-  the driver never collects the KB;
+* candidates come from the one J1 join (`candidates.attach_candidates`):
+  per-surface ``cand_ids`` / ``cand_names`` / ``cand_priors`` arrays rolled
+  up KB-side, broadcast while the KB fits — the KB is never collected, and
+  the embedding row is the KB's ``ent_id`` (md5[:8]) mod n, so the scorer
+  never hashes;
 * scoring is one Arrow-batched ``mapInPandas`` doing a batched gather +
   einsum against the broadcast embedding matrix — no per-mention or
   per-candidate Python loop.
@@ -37,6 +38,7 @@ from pyspark.sql.types import (
 
 from ed_twitter_spark.functions import kernels
 from ed_twitter_spark.functions.fixtures import load_embedding_matrix
+from ed_twitter_spark.operators.candidates import attach_candidates
 from ed_twitter_spark.synth import MENTION_MIN_LEN
 
 COS_WINDOW = 25  # ±25 tokens, turn-local (prerank_ctx_window // 2)
@@ -63,12 +65,6 @@ def _word_id_col(tok, n_vec: int):
     )
 
 
-def _ent_code_col(name, n_vec: int):
-    return (F.conv(F.substring(F.md5(name), 1, 8), 16, 10).cast("long") % n_vec).cast(
-        "int"
-    )
-
-
 def link_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ed_twitter_spark import synth
 
@@ -79,22 +75,6 @@ def link_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = synth.transcripts(spark, sf_dir)
     kb = synth.kb_alias(spark, sf_dir)
-
-    # KB-side candidate arrays, ent_name asc so the scorer's first-max
-    # argmax reproduces the ent_name tie-break; entity codes computed in
-    # the JVM so the scorer never hashes
-    kb_arrays = (
-        kb.groupBy("mention")
-        .agg(F.sort_array(F.collect_list(F.struct("ent_name", "prior"))).alias("c"))
-        .select(
-            "mention",
-            F.col("c.ent_name").alias("cand_names"),
-            F.transform(F.col("c.ent_name"), lambda e: _ent_code_col(e, n_vec)).alias(
-                "cand_codes"
-            ),
-            F.col("c.prior").alias("cand_priors"),
-        )
-    )
 
     # JVM-side tokenization + word-id coding + ±25 slices (mention excluded)
     toks = F.split("text", r"\s+")
@@ -126,7 +106,8 @@ def link_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat(left, right).alias("ctx_ids"),
         )
     )
-    cands = m.join(F.broadcast(kb_arrays), "mention")  # inner: KB surfaces only
+    # inner semantics: KB surfaces only
+    cands = attach_candidates(m, kb).where(F.col("cand_ids").isNotNull())
 
     def score_batches(it):
         emb_m = bc.value
@@ -149,14 +130,15 @@ def link_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
             if empty.any():
                 ctx_sums[empty] = 0.0
             lens = np.fromiter(
-                (len(x) for x in pdf["cand_codes"]), dtype=np.int64, count=n
+                (len(x) for x in pdf["cand_ids"]), dtype=np.int64, count=n
             )
             cmax = int(lens.max())
             rows = np.repeat(np.arange(n), lens)
             cols = np.concatenate([np.arange(k) for k in lens])
             codes = np.full((n, cmax), unk_id, dtype=np.int64)
-            codes[rows, cols] = np.concatenate(
-                [np.asarray(x, dtype=np.int64) for x in pdf["cand_codes"]]
+            codes[rows, cols] = (
+                np.concatenate([np.asarray(x, dtype=np.int64) for x in pdf["cand_ids"]])
+                % n_vec
             )
             priors = np.zeros((n, cmax))
             priors[rows, cols] = np.concatenate(
@@ -173,8 +155,14 @@ def link_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
                 priors + 1e-20
             )
             scores[~mask] = -np.inf
-            best = scores.argmax(axis=1)  # first max = ent_name asc tie-break
+            best = scores.argmax(axis=1)
             ar = np.arange(n)
+            # candidates arrive in rank order: an exact score tie goes to
+            # the smallest ent_name, as the oracle's ORDER BY score DESC,
+            # ent_name does
+            tied = (scores == scores[ar, best][:, None]) & mask
+            for i in np.flatnonzero(tied.sum(axis=1) > 1):
+                best[i] = min(np.flatnonzero(tied[i]), key=lambda j: names[i, j])
             out = pd.DataFrame(
                 {
                     "subj": (

@@ -22,7 +22,9 @@ from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
+from ed_twitter_spark import synth
 from ed_twitter_spark.functions.fixtures import word_code
 from ed_twitter_spark.functions.text import is_important_word
 from ed_twitter_spark.operators.linker import (
@@ -197,5 +199,5 @@ def link_eval_set(
     conll_df = read_conll(spark, conll_path) if (align and conll_path) else None
     cands = prepare_eval_mentions(
         csv_df, conll_df, emb.shape[0] - 1, person_names, align
-    )
+    ).withColumn("cand_ids", F.transform("cand_names", synth.ent_id_col))
     return score_mentions(cands, emb)

@@ -3154,6 +3154,8 @@ def kg_scc(edges: DataFrame) -> DataFrame:
         raise RuntimeError(
             f"kg_scc did not drain in {SCC_MAX_ROUNDS} FW-BW rounds"
         )
+    if not done_frames:  # edge-free input: no vertices, typed empty output
+        done_frames.append(verts.select("v", F.col("v").alias("scc_id")))
     out = done_frames[0]
     for f in done_frames[1:]:
         out = out.unionByName(f)

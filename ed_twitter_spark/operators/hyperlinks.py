@@ -16,9 +16,9 @@ record per hyperlink whose gold entity appears in its candidate list
   ``hyp_ctxt_len`` default 10) emitted alongside as hyp_left/hyp_right.
 
 Spark-first shape: the anchors table IS the marked-mention stream (word
-offsets are the anchor positions), so the whole emitter is a broadcast
-candidate join plus JVM array slices over the tokenized page — no Python,
-one shuffle-free scan of ``documents`` on the stream side.
+offsets are the anchor positions), so the whole emitter is the shared J1
+candidate join (`candidates.attach_candidates`, capped with ``F.slice``)
+plus JVM array slices over the tokenized page — no Python.
 """
 
 from __future__ import annotations
@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from ed_twitter_spark import synth
 from ed_twitter_spark.functions.hashing import TOKS_SQL, toks_col
+from ed_twitter_spark.operators.candidates import attach_candidates
 
 HYP_CAND_CAP = 33  # gen_wiki_hyp_train_data.py:149 (`pos > 32` admits 33)
 RAW_LEFT = 101  # words[max(0, start-101) : start-1]
@@ -42,22 +43,14 @@ def hyperlink_contexts(spark: SparkSession, sf_dir: str) -> DataFrame:
     hyp = hyp.withColumn("gold_ent_id", synth.ent_id_col(F.col("ent_name")))
 
     kb = synth.kb_alias(spark, sf_dir)
-    kb_arrays = (
-        kb.groupBy("mention")
-        .agg(F.sort_array(F.collect_list(F.struct("rank", "ent_id"))).alias("c"))
-        .select(
-            "mention",
-            F.slice(F.col("c.ent_id"), 1, HYP_CAND_CAP).alias("cand_ids"),
-        )
-    )
-
-    j = hyp.join(pages, "doc_id").join(F.broadcast(kb_arrays), "mention")
+    j = attach_candidates(hyp, kb).join(pages, "doc_id")
+    cand_ids = F.slice("cand_ids", 1, HYP_CAND_CAP)
     p = F.col("pos")
     llo = F.greatest(p - RAW_LEFT, F.lit(0))  # 0-based slice start
     lctx = F.slice("toks", llo + 1, F.greatest(p - 1 - llo, F.lit(0)))
     rlen = F.greatest(F.least(F.size("toks") - p - 1, F.lit(RAW_RIGHT)), F.lit(0))
     rctx = F.slice("toks", p + 2, rlen)
-    gt_pos = F.array_position(F.col("cand_ids"), F.col("gold_ent_id"))
+    gt_pos = F.array_position(cand_ids, F.col("gold_ent_id"))
 
     out = j.select(
         "doc_id",
@@ -88,7 +81,7 @@ def hyperlink_contexts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.size(rctx) > 0, F.array_join(F.slice(rctx, 1, HYP_CTXT_LEN), " ")
         ).otherwise(F.lit("EMPTYCTXT")).alias("hyp_right"),
         gt_pos.cast("int").alias("gt_pos"),
-        F.size("cand_ids").cast("int").alias("n_cands"),
+        F.size(cand_ids).cast("int").alias("n_cands"),
     )
     return out.where(F.col("gt_pos") >= 1)
 

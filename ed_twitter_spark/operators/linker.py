@@ -7,17 +7,19 @@ Pipeline (SURVEY.md §3.3 "Spark lifecycle equivalent"):
    with its raw ±100 window sliced → stopword-filtered ±50 ids (W3), and the
    turn-local ±3 relation window (W4). Exact slice chain of
    `gen_aida_train.py:113-127` → `ed_ranker.py:196-235`.
-2. **candidate attach** (J1): broadcast join against the p(e|m) table,
-   collect per-mention candidate arrays in prior-desc order.
+2. **candidate attach** (J1): `candidates.attach_candidates` — the one
+   join against the KB-side candidate table (per-surface ``cand_ids`` /
+   ``cand_names`` / ``cand_priors`` arrays in rank order), broadcast or
+   salted by the table's size.
 3. **scoring** (K1-K6, T5, T7): `applyInPandas` over (conv_id, chunk) —
    documents >100 mentions are chunked exactly like `ed_ranker.py:253-256`
    — running the numpy kernels with the broadcast embedding matrix.
 
 Scale notes: stage 1 and 3 shuffle once each on conv_id (stage 3 reuses the
 partitioning modulo chunk salt — the chunk key also bounds LBP memory, which
-is O(M²·C²)); stage 2 is a broadcast join, no shuffle. Viral conversations
-are bounded by chunking; head mentions ride the broadcast join so key skew
-never hits a shuffle.
+is O(M²·C²)); stage 2 is a broadcast join (no shuffle) while the KB fits,
+and a salted shuffle join that splits head mentions when it does not.
+Viral conversations are bounded by chunking.
 """
 
 from __future__ import annotations
@@ -39,12 +41,12 @@ from pyspark.sql.types import (
 from ed_twitter_spark.functions import kernels
 from ed_twitter_spark.functions.fixtures import (
     ModelWeights,
-    ent_code,
     fixture_weights,
     load_embedding_matrix,
     word_code,
 )
 from ed_twitter_spark.functions.text import is_important_word
+from ed_twitter_spark.operators.candidates import attach_candidates
 from ed_twitter_spark.synth import MENTION_MIN_LEN
 
 RAW_WINDOW = 100  # ±100 raw tokens (gen_aida_train.py:113-127)
@@ -95,20 +97,6 @@ _TRIPLE_SCHEMA = StructType(
 # so a viral conversation parallelizes instead of becoming one straggler
 # task. Halo duplication overhead ≈ 2·RAW_WINDOW/SEG_TOKENS ≈ 5%.
 SEG_TOKENS = 4096
-
-# Per-process memo of ent_code (md5 of the entity name): head entities
-# recur across every chunk a worker scores, so the md5 is paid once per
-# distinct name per worker instead of once per (mention, candidate) slot.
-_ENT_CODE_CACHE: dict[str, int] = {}
-
-
-def _ent_code_cached(name: str) -> int:
-    code = _ENT_CODE_CACHE.get(name)
-    if code is None:
-        code = ent_code(name)
-        _ENT_CODE_CACHE[name] = code
-    return code
-
 
 def build_mention_windows(
     transcripts_df: DataFrame, n_vectors: int, seg_tokens: int = SEG_TOKENS
@@ -266,31 +254,6 @@ def build_mention_windows(
     )
 
 
-def attach_candidates(windows_df: DataFrame, kb_df: DataFrame) -> DataFrame:
-    """Stage 2: broadcast J1 with candidate arrays pre-aggregated KB-side.
-
-    The per-mention candidate list is rolled up on the *small* side before
-    the join (|KB| rows → |distinct surface| rows), so the mention stream —
-    the 10^12-row side — sees a pure broadcast hash join and **zero
-    shuffle**. The earlier formulation (join-then-groupBy on the stream)
-    shuffled every window row once; this one moves the groupBy to the dim
-    table where it costs nothing at any scale."""
-    kb_arrays = (
-        kb_df.groupBy("mention")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct("rank", "ent_name", "prior"))
-            ).alias("cands")
-        )
-        .select(
-            "mention",
-            F.col("cands.ent_name").alias("cand_names"),
-            F.col("cands.prior").alias("cand_priors"),
-        )
-    )
-    return windows_df.join(F.broadcast(kb_arrays), on="mention", how="left")
-
-
 def prepare_chunk(pdf: pd.DataFrame, emb: np.ndarray, n_vec: int, unk_id: int) -> dict:
     """Shared per-chunk data prep for the scorer AND the full-model
     trainer: candidate packing, K1 prerank + T5 selection, and the K2
@@ -304,59 +267,44 @@ def prepare_chunk(pdf: pd.DataFrame, emb: np.ndarray, n_vec: int, unk_id: int) -
 
     # --- candidate packing, vectorized over the ragged arrays ---
     # flatten the per-mention candidate lists (truncated to c) once,
-    # then scatter into the rectangular (m, c) frames; per-element
-    # results are identical to the old per-row loop, including its
-    # gap semantics for None names (slot j stays unk/1e-8/0 but the
-    # compacted `named` list drops the gap — ed_ranker keeps parallel
-    # arrays the same way)
+    # then scatter into the rectangular (m, c) frames. A None name leaves
+    # a gap: slot j stays unk/1e-8/0 but the compacted `named` list drops
+    # it (ed_ranker keeps parallel arrays the same way). Embedding rows are
+    # the KB's ent_id (md5[:8] of the name) mod n_vec — no hashing here.
     names_trunc: list[list] = []
-    priors_trunc: list[list] = []
-    for ns, ps in zip(pdf["cand_names"], pdf["cand_priors"]):
-        ns = list(ns) if ns is not None else []
-        ps = list(ps) if ps is not None else []
-        ln = min(len(ns), len(ps), c)  # zip() pairing of the old loop
-        names_trunc.append(ns[:ln])
-        priors_trunc.append(ps[:ln])
-    lens = np.fromiter((len(x) for x in names_trunc), dtype=np.int64, count=m)
-    flat_names = [nme for ns in names_trunc for nme in ns]
+    lens = np.zeros(m, dtype=np.int64)
+    id_parts, prior_parts = [], []
+    for i, (ns, ps, ids) in enumerate(
+        zip(pdf["cand_names"], pdf["cand_priors"], pdf["cand_ids"])
+    ):
+        ln = 0 if ns is None or ps is None else min(len(ns), len(ps), c)
+        lens[i] = ln
+        names_trunc.append(list(ns[:ln]) if ln else [])
+        if ln:
+            id_parts.append(np.asarray(ids[:ln]))
+            prior_parts.append(np.asarray(ps[:ln]))
+    n_flat = int(lens.sum())
     rows_ix = np.repeat(np.arange(m), lens)
-    cols_ix = np.concatenate(
-        [np.arange(n_) for n_ in lens]
-    ) if m else np.zeros(0, dtype=np.int64)
+    cols_ix = np.arange(n_flat) - np.repeat(np.cumsum(lens) - lens, lens)
     nonnull = np.fromiter(
-        (nme is not None for nme in flat_names), dtype=bool, count=len(flat_names)
-    )
-    codes = np.fromiter(
-        (
-            _ent_code_cached(nme) % n_vec if keep else 0
-            for nme, keep in zip(flat_names, nonnull)
-        ),
-        dtype=np.int64,
-        count=len(flat_names),
-    )
-    flat_priors = np.fromiter(
-        (
-            float(pr) if keep else 0.0
-            for pr, keep in zip(
-                (p for ps in priors_trunc for p in ps), nonnull
-            )
-        ),
-        dtype=np.float64,
-        count=len(flat_names),
+        (nme is not None for ns in names_trunc for nme in ns), dtype=bool, count=n_flat
     )
     cand_rows = np.full((m, c), unk_id, dtype=np.int64)
     pem = np.full((m, c), 1e-8, dtype=np.float64)
     mask = np.zeros((m, c), dtype=np.float64)
-    rnn, cnn = rows_ix[nonnull], cols_ix[nonnull]
-    cand_rows[rnn, cnn] = codes[nonnull]
-    # ed_ranker.py:164 clip; min/max on a python float and np.clip on a
-    # float64 array produce identical doubles
-    pem[rnn, cnn] = np.clip(flat_priors[nonnull], 1e-3, 1.0)
-    mask[rnn, cnn] = 1.0
+    if n_flat:
+        rnn, cnn = rows_ix[nonnull], cols_ix[nonnull]
+        cand_rows[rnn, cnn] = np.concatenate(id_parts)[nonnull].astype(np.int64) % n_vec
+        # ed_ranker.py:164 clip; min/max on a python float and np.clip on a
+        # float64 array produce identical doubles
+        pem[rnn, cnn] = np.clip(
+            np.concatenate(prior_parts)[nonnull].astype(np.float64), 1e-3, 1.0
+        )
+        mask[rnn, cnn] = 1.0
     named: list[list[str]] = [
         [nme for nme in ns if nme is not None] for ns in names_trunc
     ]
-    for i, nm in enumerate(named):
+    for nm in named:
         if len(nm) < c:
             nm.extend(["#UNK#"] * (c - len(nm)))
 

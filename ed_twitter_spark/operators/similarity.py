@@ -439,6 +439,7 @@ _EMB_D_SQL = (
     "SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v"
     " FROM embeddings"
 )
+_EMB_CTE = f"emb AS ({_EMB_D_SQL})"  # shared by both k-means chains
 _SQD_SQL = (
     f"ROUND(list_sum(list_transform(range(1, {EMB_DIMS + 1}),"
     " k -> (e.v[k] - c.cvec[k]) ** 2)), 4)"
@@ -447,7 +448,7 @@ _SQD_SQL = (
 
 def _kmeans_cte(k: int = K_CENTROIDS) -> str:
     parts = [
-        f"emb AS ({_EMB_D_SQL})",
+        _EMB_CTE,
         f"c0 AS (SELECT CAST(vec_id AS INTEGER) AS cid, v AS cvec FROM emb WHERE vec_id < {k})",
     ]
     prev = "c0"
@@ -925,9 +926,11 @@ _SV_SQD_SQL = (
 )
 
 
-def _pq_kmeans_cte() -> tuple[str, str]:
+def _pq_kmeans_cte() -> tuple[list[str], str]:
+    """The PQ k-means chain as a list of CTEs over ``emb`` (declared by the
+    caller, so the chain splices after the IVF chain's own ``emb``) and the
+    name of its final codebook CTE."""
     parts = [
-        f"emb AS ({_EMB_D_SQL})",
         f"""sv AS MATERIALIZED (
   SELECT vec_id, CAST(s AS INTEGER) AS sub,
          v[s * {SUB_DIMS} + 1 : s * {SUB_DIMS} + {SUB_DIMS}] AS sv
@@ -958,10 +961,11 @@ def _pq_kmeans_cte() -> tuple[str, str]:
 )"""
         )
         prev = f"p{i}"
-    return ",\n".join(parts), prev
+    return parts, prev
 
 
-_PQ_BODY, _PQ_FINAL = _pq_kmeans_cte()
+_PQ_PARTS, _PQ_FINAL = _pq_kmeans_cte()
+_PQ_BODY = ",\n".join([_EMB_CTE, *_PQ_PARTS])
 
 ANN_PQ_CODES_SQL = f"""
 WITH {_PQ_BODY}
@@ -1237,13 +1241,12 @@ def ann_ivfadc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# twin: both k-means chains in one WITH; the PQ body re-declares `emb`,
-# so its duplicate first CTE is dropped before splicing
-_PQ_BODY_NO_EMB = _PQ_BODY.split(",\n", 1)[1]
+# twin: both k-means chains in one WITH, sharing the IVF chain's `emb`
+_PQ_CHAIN = ",\n".join(_PQ_PARTS)
 
 ANN_IVFADC_SQL = f"""
 WITH {_KMEANS_BODY},
-{_PQ_BODY_NO_EMB},
+{_PQ_CHAIN},
 ccells AS (
   SELECT vec_id, cid FROM (
     SELECT e.vec_id, c.cid,

@@ -1,11 +1,12 @@
 """Bucketed co-located joins: shuffle-free *repeated* joins at fact scale.
 
 The mention→KB candidate join (J1) recurs in every linking stage — prior
-argmax, cosine rerank, embedding LBP — and `operators/candidates.py`
-already selects between a broadcast hash join (dim-sized KB) and a salted
-shuffle-hash join (fact-sized, skewed KB). Both re-pay their cost on every
-execution: the broadcast re-ships the KB per stage, the shuffle re-shuffles
-the full mention stream per stage.
+argmax, cosine rerank, embedding LBP — and all of them go through the one
+join in `operators/candidates.py`, which picks a broadcast hash join
+(dim-sized KB) or a salted shuffle-hash join (fact-sized, skewed KB) from
+the KB-side candidate table's size estimate. Both arms re-pay their cost on
+every execution: the broadcast re-ships the KB per stage, the shuffle
+re-shuffles the full mention stream per stage.
 
 At 100 TB the scale-optimal layout for a *recurring* equi-join is bucketed
 storage: write both sides hash-partitioned into the same number of buckets

@@ -8,8 +8,9 @@ fingerprints) is **skipped** and loaded from its checkpoint, so a run killed
 mid-pipeline resumes at the first incomplete stage (north rule,
 BASELINE.json:6,14). The reference's equivalent is the strict file-dataflow
 of run_all.sh (`deep-ed-pytorch/run_all.sh:22-36`) plus torch memo-caches —
-ours adds fingerprint invalidation so upstream edits re-run exactly the
-downstream suffix.
+ours adds fingerprint invalidation: a re-run stage re-runs exactly its
+downstream suffix, and the code version is a digest of the package sources
+(:data:`CODE_VERSION`), so a checkpoint built by other code is never reused.
 
 Stage boundaries double as shuffle barriers: transcripts and kb_alias scan
 the raw input once each; windows/triples shuffle on conv_id; components is
@@ -22,9 +23,11 @@ Run:  spark-submit --py-files ed_twitter_spark.zip -m ed_twitter_spark.plans.pip
 
 from __future__ import annotations
 
+import hashlib
 import sys
 import time
 from dataclasses import dataclass
+from importlib import resources
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -35,9 +38,32 @@ from ed_twitter_spark import io as kgio
 @dataclass(frozen=True)
 class Stage:
     name: str
-    version: str  # bump when the stage's code semantics change
+    version: str  # CODE_VERSION: a checkpoint is reused only by the code that built it
     deps: tuple[str, ...]
     build: Callable[[SparkSession, str, dict[str, DataFrame]], DataFrame]
+
+
+def source_digest(pkg=None) -> str:
+    """md5[:16] over the relative path and bytes of every ``.py`` source of
+    the package (``pkg``: a directory, default the installed package — a
+    zip on ``--py-files`` works too). Any code edit changes it, so a resumed
+    run cannot reuse a checkpoint that different code built; the price is
+    that an edit anywhere in the package rebuilds every stage."""
+    h = hashlib.md5()
+
+    def walk(node, rel: str) -> None:
+        for child in sorted(node.iterdir(), key=lambda c: c.name):
+            if child.is_dir():
+                walk(child, f"{rel}{child.name}/")
+            elif child.name.endswith(".py"):
+                h.update(f"{rel}{child.name}\0".encode())
+                h.update(child.read_bytes())
+
+    walk(pkg if pkg is not None else resources.files("ed_twitter_spark"), "")
+    return h.hexdigest()[:16]
+
+
+CODE_VERSION = source_digest()  # once per process
 
 
 def _transcripts(spark, sf_dir, _):
@@ -61,7 +87,7 @@ def _windows(spark, sf_dir, inputs):
 
 
 def _candidates(spark, sf_dir, inputs):
-    from ed_twitter_spark.operators.linker import attach_candidates
+    from ed_twitter_spark.operators.candidates import attach_candidates
 
     return attach_candidates(inputs["windows"], inputs["kb_alias"])
 
@@ -97,14 +123,14 @@ def _edges(spark, sf_dir, inputs):
 
 
 STAGES: tuple[Stage, ...] = (
-    Stage("transcripts", "v1", (), _transcripts),
-    Stage("kb_alias", "v1", (), _kb_alias),
-    Stage("windows", "v1", ("transcripts",), _windows),
-    Stage("candidates", "v1", ("windows", "kb_alias"), _candidates),
-    Stage("triples", "v1", ("candidates",), _triples),
-    Stage("components", "v1", ("triples", "kb_alias"), _components),
-    Stage("vertices", "v1", ("components",), _vertices),
-    Stage("edges", "v1", ("triples", "components"), _edges),
+    Stage("transcripts", CODE_VERSION, (), _transcripts),
+    Stage("kb_alias", CODE_VERSION, (), _kb_alias),
+    Stage("windows", CODE_VERSION, ("transcripts",), _windows),
+    Stage("candidates", CODE_VERSION, ("windows", "kb_alias"), _candidates),
+    Stage("triples", CODE_VERSION, ("candidates",), _triples),
+    Stage("components", CODE_VERSION, ("triples", "kb_alias"), _components),
+    Stage("vertices", CODE_VERSION, ("components",), _vertices),
+    Stage("edges", CODE_VERSION, ("triples", "components"), _edges),
 )
 
 

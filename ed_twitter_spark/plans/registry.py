@@ -177,13 +177,13 @@ def q_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("candidates_salted", _CANDIDATES_ORACLE)
 def q_candidates_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The broadcast-vs-shuffle selection's large-KB arm: same rows as
-    `candidates`, produced by the salted shuffle-hash join (head-mention
-    skew split across SALT_BUCKETS reducers). Same oracle — the strategies
-    must be value-identical."""
+    """The broadcast-vs-shuffle selection's large-KB arm (forced with a
+    zero broadcast limit): same rows as `candidates`, produced by the
+    salted shuffle-hash join (head-mention skew split across SALT_BUCKETS
+    reducers). Same oracle — the arms must be value-identical."""
     m = mention_ops.detect_mentions(synth.transcripts(spark, sf_dir))
     kb = synth.kb_alias(spark, sf_dir)
-    return cand_ops.gen_candidates(m, kb, strategy="shuffle_salted")
+    return cand_ops.gen_candidates(m, kb, broadcast_limit_bytes=0)
 
 
 @register("candidates_bucketed", _CANDIDATES_ORACLE)
@@ -1334,6 +1334,7 @@ SELECT variant,
        ROUND(2.0 * ({tp} * 1.0 / {np_}) * ({tp} * 1.0 / COUNT(*))
              / (({tp} * 1.0 / {np_}) + ({tp} * 1.0 / COUNT(*))), 6) AS f1
 FROM j GROUP BY variant
+ORDER BY variant
 """
 
     @register("eval_ablation", sql)
@@ -1349,7 +1350,7 @@ FROM j GROUP BY variant
         b = eval_ops.micro_prf(cos, gold).select(
             F.lit("cosine").alias("variant"), "*"
         )
-        return a.unionByName(b)
+        return a.unionByName(b).orderBy("variant")
 
 
 _register_eval_ablation()

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 from ed_twitter_spark import synth
 from ed_twitter_spark.functions.text import split_in_words
+from ed_twitter_spark.operators.candidates import attach_candidates
 
 CAND_CAP = 101  # gen_from_tweets.py:73 (`pos > 100` breaks after 101 appends)
 
@@ -152,9 +153,9 @@ def mention_context_lines(resolved: DataFrame, kb: DataFrame) -> DataFrame:
     byte-compatible with find_and_write_candidates output (and therefore
     with the S5 reader `parse_csv_line`).
 
-    All string surgery is JVM column algebra; the candidate list rides a
-    broadcast join of KB-side pre-aggregated arrays (prior desc, capped at
-    CAND_CAP), so the tweet stream never shuffles."""
+    All string surgery is JVM column algebra; the candidate list comes
+    from the shared J1 join (`candidates.attach_candidates`: KB-side
+    arrays in rank order, capped here at CAND_CAP)."""
     ws = F.lit("EMPTYCTXT")
     lctx_arr = F.filter(
         F.split(F.expr("substring(text, 1, start_idx)"), r"\s+"), lambda t: t != ""
@@ -180,30 +181,21 @@ def mention_context_lines(resolved: DataFrame, kb: DataFrame) -> DataFrame:
 
 
 def _attach_candidates_and_format(base: DataFrame, kb: DataFrame) -> DataFrame:
-    kb_arrays = (
-        kb.groupBy("mention")
-        .agg(F.sort_array(F.collect_list(F.struct("rank", "ent_id", "prior", "ent_name"))).alias("c"))
-        .select(
-            "mention",
-            F.slice("c", 1, CAND_CAP).alias("c"),
-        )
-        .select(
-            "mention",
-            F.transform(
-                F.col("c"),
-                lambda s: F.format_string(
-                    "%s,%s,%s",
-                    s["ent_id"].cast("string"),
-                    F.format_string("%.3f", s["prior"]),
-                    s["ent_name"],
-                ),
-            ).alias("cand_strs"),
-            F.col("c.ent_id").alias("cand_ids"),
-        )
+    cand_ids = F.slice("cand_ids", 1, CAND_CAP)
+    j = attach_candidates(base, kb).select(
+        "*",
+        F.transform(
+            cand_ids,
+            lambda ent_id, i: F.format_string(
+                "%s,%s,%s",
+                ent_id.cast("string"),
+                F.format_string("%.3f", F.col("cand_priors")[i]),
+                F.col("cand_names")[i],
+            ),
+        ).alias("cand_strs"),
     )
-    j = base.join(F.broadcast(kb_arrays), "mention", "left")
     # 1-based gold position among the (capped) candidates
-    gt_pos = F.coalesce(F.array_position(F.col("cand_ids"), F.col("gold_ent_id")), F.lit(0))
+    gt_pos = F.coalesce(F.array_position(cand_ids, F.col("gold_ent_id")), F.lit(0))
     prefix = F.concat_ws(
         "\t", "tweet_id", "tweet_id", "mention", "lctx", "rctx", F.lit("CANDIDATES")
     )

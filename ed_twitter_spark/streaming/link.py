@@ -49,7 +49,7 @@ def link_stream(turns_stream: DataFrame, kb_df: DataFrame) -> DataFrame:
     (BASELINE.json input_hint); ``kb_df`` is the static KB alias table.
     """
     m = mention_ops.detect_mentions(turns_stream)
-    cand = cand_ops.gen_candidates(m, kb_df, strategy="broadcast")
+    cand = cand_ops.gen_candidates(m, kb_df)
     return cand_ops.link_prior_argmax(cand)
 
 

@@ -1455,6 +1455,22 @@ def test_scc_full_cycle_and_chained_components(spark):
     assert _scc_map(kg_scc(e2)) == {1: 1, 2: 1, 3: 3, 4: 3, 5: 5, 6: 5}
 
 
+@pytest.mark.parametrize(
+    "convs", [[], [("c1", [7])], [("c1", [7, 7]), ("c2", [8])]], ids=["empty", "single", "self_loops"]
+)
+def test_scc_edge_free_input_is_typed_empty(spark, convs):
+    from ed_twitter_spark.operators.graph import kg_scc
+
+    # no succession edge survives (no events, one event per conversation,
+    # self-loops only): an empty (vertex_id, scc_id) frame, not a crash
+    out = kg_scc(_succ_edges(spark, convs))
+    assert out.collect() == []
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema.fields] == [
+        ("vertex_id", "bigint"),
+        ("scc_id", "bigint"),
+    ]
+
+
 def test_condensation_contracts_cycles_into_a_dag(spark):
     from ed_twitter_spark.operators.graph import kg_condensation
 

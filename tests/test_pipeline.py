@@ -35,6 +35,44 @@ def test_pipeline_runs_resumes_and_invalidates(spark, tmp_path):
         assert r3[st]["rows"] == r1[st]["rows"], st
 
 
+def test_stage_versions_are_the_source_digest(spark, tmp_path, monkeypatch):
+    """A checkpoint is reused only by the code that built it: with the same
+    code every stage skips; under another source digest every stage
+    rebuilds."""
+    import dataclasses
+
+    from ed_twitter_spark.plans import pipeline
+
+    assert {st.version for st in STAGES} == {pipeline.CODE_VERSION}
+    root = str(tmp_path / "ckpt")
+    run_pipeline(spark, SF_SMOKE, root)
+    assert all(rec["skipped"] for rec in run_pipeline(spark, SF_SMOKE, root).values())
+
+    other = "0" * 16
+    assert other != pipeline.CODE_VERSION
+    monkeypatch.setattr(
+        pipeline, "STAGES", tuple(dataclasses.replace(st, version=other) for st in STAGES)
+    )
+    assert not any(rec["skipped"] for rec in run_pipeline(spark, SF_SMOKE, root).values())
+
+
+def test_source_digest_tracks_every_source_file(tmp_path):
+    import shutil
+    from pathlib import Path
+
+    from ed_twitter_spark.plans import pipeline
+
+    pkg = Path(pipeline.__file__).resolve().parents[1]
+    copy = tmp_path / "pkg"
+    shutil.copytree(pkg, copy, ignore=shutil.ignore_patterns("__pycache__"))
+    assert pipeline.source_digest(copy) == pipeline.CODE_VERSION
+    (copy / "notes.txt").write_text("not a source")
+    assert pipeline.source_digest(copy) == pipeline.CODE_VERSION
+    with open(copy / "operators" / "linker.py", "a") as f:
+        f.write("\n")
+    assert pipeline.source_digest(copy) != pipeline.CODE_VERSION
+
+
 def test_metrics_per_partition_sum_to_total(spark, tmp_path):
     root = str(tmp_path / "ckpt")
     run_pipeline(spark, SF_SMOKE, root)

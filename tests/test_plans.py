@@ -18,6 +18,10 @@ from ed_twitter_spark.functions.fixtures import load_embedding_matrix
 from ed_twitter_spark.operators.linker import attach_candidates, build_mention_windows
 
 
+# a broadcast limit no size estimate exceeds: pins J1 to its broadcast arm
+ALWAYS_BROADCAST = 1 << 63
+
+
 def plan_of(df) -> str:
     import contextlib
     import io
@@ -46,14 +50,14 @@ def test_candidate_join_salted_shuffle_path(spark):
 
     m = detect_mentions(synth.transcripts(spark, SF_SMOKE))
     kb = synth.kb_alias(spark, SF_SMOKE)
-    salted = gen_candidates(m, kb, strategy="shuffle_salted")
+    salted = gen_candidates(m, kb, broadcast_limit_bytes=0)
     plan = plan_of(salted)
     # the large-KB arm must NOT materialize the KB on every executor...
     assert "BroadcastHashJoin" not in plan
     # ...and must use the hash (not sort-merge) shuffle join we hint
     assert "ShuffledHashJoin" in plan
     # identical rows to the broadcast arm (left-join NULLs included)
-    broadcast = gen_candidates(m, kb, strategy="broadcast")
+    broadcast = gen_candidates(m, kb, broadcast_limit_bytes=ALWAYS_BROADCAST)
     assert salted.exceptAll(broadcast).count() == 0
     assert broadcast.exceptAll(salted).count() == 0
 
@@ -75,7 +79,7 @@ def test_candidate_join_bucketed_zero_exchange(spark, tmp_path):
     assert "SelectedBucketsCount: 8 out of 8" in plan
     m = detect_mentions(synth.transcripts(spark, SF_SMOKE))
     kb = synth.kb_alias(spark, SF_SMOKE)
-    broadcast = gen_candidates(m, kb, strategy="broadcast")
+    broadcast = gen_candidates(m, kb, broadcast_limit_bytes=ALWAYS_BROADCAST)
     assert bucketed.exceptAll(broadcast).count() == 0
     assert broadcast.exceptAll(bucketed).count() == 0
 
@@ -102,6 +106,24 @@ def test_attach_candidates_zero_shuffle_on_stream(spark):
     # the window stream must flow into the join without a hash exchange on
     # the join key
     assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
+
+
+def test_attach_candidates_salted_arm_equals_broadcast(spark):
+    """The pipeline's J1 (array form) has the large-KB arm too: forced onto
+    the salted shuffle-hash join it returns exactly the broadcast rows,
+    NULL-candidate windows included (a third of the surfaces are dropped
+    from the KB so that the left join has misses)."""
+    emb = load_embedding_matrix(spark, SF_SMOKE)
+    w = build_mention_windows(synth.transcripts(spark, SF_SMOKE), emb.shape[0] - 1)
+    kb = synth.kb_alias(spark, SF_SMOKE).where("pmod(hash(mention), 3) <> 0")
+    salted = attach_candidates(w, kb, broadcast_limit_bytes=0)
+    plan = plan_of(salted)
+    assert "BroadcastHashJoin" not in plan and "ShuffledHashJoin" in plan
+    broadcast = attach_candidates(w, kb, broadcast_limit_bytes=ALWAYS_BROADCAST)
+    assert salted.columns == broadcast.columns
+    assert salted.where("cand_ids IS NULL").count() > 0
+    assert salted.exceptAll(broadcast).count() == 0
+    assert broadcast.exceptAll(salted).count() == 0
 
 
 def test_mentions_scan_prunes_columns(spark):
