@@ -45,10 +45,16 @@ def h64_col(col: Column) -> Column:
     return (hi - F.lit(2147483648)) * F.lit(4294967296) + lo
 
 
-# tokenization shared by the corpus operators: whitespace split, as both
-# engines express identically (string_split_regex / F.split on \s+)
-TOKS_SQL = r"string_split_regex(text, '\s+')"
+# The package's one tokenizer: a whitespace split, identical in both engines
+# (a leading separator gives a leading "" token; null text, a null array).
+def toks_sql(expr: str = "text") -> str:
+    """DuckDB: the token array of the string expression ``expr``."""
+    return f"string_split_regex({expr}, '\\s+')"
 
 
-def toks_col() -> Column:
-    return F.split("text", r"\s+")
+TOKS_SQL = toks_sql()
+
+
+def toks_col(text: str | Column = "text") -> Column:
+    """Spark twin of :func:`toks_sql`; ``text`` is a column name or Column."""
+    return F.split(text, r"\s+")

@@ -1,8 +1,7 @@
 """Scalar text operators (SURVEY.md §2.2 P1-P5, §2.8).
 
-All are pure and deterministic; the Spark path applies them either as
-built-in column expressions (JVM-side, preferred) or inside Arrow-batched
-pandas UDFs (never per-row Python UDFs). Reference cites:
+All are pure and deterministic; the Spark path applies them inside
+Arrow-batched pandas UDFs (never per-row Python UDFs). Reference cites:
 
 * tokenizer: ``RegexpTokenizer(r'\\w+')`` + unidecode transliteration,
   `deep-ed-pytorch/utils/utils.py:24-26`. We vendor a small ASCII fold
@@ -16,9 +15,6 @@ pandas UDFs (never per-row Python UDFs). Reference cites:
 from __future__ import annotations
 
 import re
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 # --- stopword list (public list shipped with mulrel-nel, nel/utils.py:7-41) --
 STOPWORDS = frozenset(
@@ -114,28 +110,6 @@ def preprocess_mention(
     if cur not in known and cur.lower() in lower_to_upper:
         cur = lower_to_upper[cur.lower()]
     return cur
-
-
-# --- Spark column twins (JVM-side, used in the hot path) --------------------
-
-
-def tokens_col(text: Column) -> Column:
-    """JVM-side \\w+ tokenizer: returns array<string> (P3 without translit —
-    the transliteration pandas UDF is applied only when non-ASCII survives)."""
-    return F.filter(
-        F.split(F.regexp_replace(text, r"\W+", " "), " "), lambda t: t != ""
-    )
-
-
-def important_filter_col(toks: Column) -> Column:
-    """P4 as a JVM array filter: len>1, not numeric, not stopword."""
-    sw = F.lit(sorted(STOPWORDS)).cast("array<string>")
-    return F.filter(
-        toks,
-        lambda t: (F.length(t) > 1)
-        & ~F.array_contains(sw, F.lower(t))
-        & F.lower(t).cast("double").isNull(),
-    )
 
 
 # --- P5: literal \\uXXXX escape repair (full reference table) --------------

@@ -53,6 +53,26 @@ def data_path(root: str, stage: str) -> str:
     return f"{root}/{stage}/data"
 
 
+# sidecar schemas; _lineage's columns are in name order, the order existing
+# checkpoints were written in
+_METRICS_DDL = "stage string, partition_id int, rows bigint"
+_LINEAGE_DDL = (
+    "deps string, fingerprint string, rows bigint, schema string, stage string,"
+    " wall_s double, written_at string"
+)
+
+
+def _write_rows(spark: SparkSession, ddl: str, rows: list[dict], path: str) -> None:
+    """Write a few driver-side rows, typed by ``ddl``, as JVM literals:
+    createDataFrame on a Python list ships it through the Python serializer
+    as a parallelized RDD, which costs more than the job that made them."""
+    cols = [c.split() for c in ddl.split(",")]
+    structs = [F.struct(*(F.lit(r[n]).cast(t).alias(n) for n, t in cols)) for r in rows]
+    spark.range(1, numPartitions=1).select(F.inline(F.array(*structs))).write.mode(
+        "overwrite"
+    ).parquet(path)
+
+
 def write_stage(
     df: DataFrame,
     root: str,
@@ -87,20 +107,12 @@ def write_stage(
     )
     n_rows = sum(r["rows"] for r in part_rows)
     metrics = sorted([(r["partition_id"], r["rows"]) for r in part_rows] + [(-1, n_rows)])
-    # rows as JVM literals: createDataFrame on a Python list ships it
-    # through the Python serializer as a parallelized RDD, which costs more
-    # than the whole aggregation job
-    structs = [
-        F.struct(
-            F.lit(stage).alias("stage"),
-            F.lit(pid).cast("int").alias("partition_id"),
-            F.lit(n).cast("long").alias("rows"),
-        )
-        for pid, n in metrics
-    ]
-    spark.range(1, numPartitions=1).select(F.inline(F.array(*structs))).write.mode(
-        "overwrite"
-    ).parquet(f"{root}/{stage}/_metrics")
+    _write_rows(
+        spark,
+        _METRICS_DDL,
+        [{"stage": stage, "partition_id": pid, "rows": n} for pid, n in metrics],
+        f"{root}/{stage}/_metrics",
+    )
 
     record = {
         "stage": stage,
@@ -111,9 +123,7 @@ def write_stage(
         "wall_s": round(time.time() - started_at, 3),
         "written_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
     }
-    spark.createDataFrame([record]).write.mode("overwrite").parquet(
-        f"{root}/{stage}/_lineage"
-    )
+    _write_rows(spark, _LINEAGE_DDL, [record], f"{root}/{stage}/_lineage")
     return record
 
 

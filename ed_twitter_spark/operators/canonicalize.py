@@ -154,6 +154,8 @@ def _hashmin_components(
         rounds += 1
         if changed == 0:
             break
+    else:
+        raise RuntimeError(f"hash-min components did not converge in {max_iter} rounds")
     if stats is not None:
         stats["rounds"] = rounds
     return labels
@@ -223,6 +225,8 @@ def _star_components(
         e = e2
         if unchanged:
             break
+    else:
+        raise RuntimeError(f"star components did not converge in {max_iter} rounds")
     if stats is not None:
         stats["rounds"] = rounds
     # at the fixpoint every (u, v) is node→component-min; roots self-label

@@ -9,7 +9,10 @@ Scale shape (the linker.py pattern, no driver-side state):
 
 * mention detection, word-id coding (md5[:6] mod n) and the ±25 turn-local
   context slices are **pure JVM column algebra** — posexplode + transform +
-  slice, whole-stage codegen, no Python;
+  slice, whole-stage codegen, no Python; the tokens and mention rows come
+  from the package's one tokenizer and mention test
+  (`hashing.toks_col`, `mentions.mention_rows`), so this linker sees the
+  same mentions, at the same positions, as every other;
 * candidates come from the one J1 join (`candidates.attach_candidates`):
   per-surface ``cand_ids`` / ``cand_names`` / ``cand_priors`` arrays rolled
   up KB-side, broadcast while the KB fits — the KB is never collected, and
@@ -38,8 +41,9 @@ from pyspark.sql.types import (
 
 from ed_twitter_spark.functions import kernels
 from ed_twitter_spark.functions.fixtures import load_embedding_matrix
+from ed_twitter_spark.functions.hashing import TOKS_SQL, toks_col
 from ed_twitter_spark.operators.candidates import attach_candidates
-from ed_twitter_spark.synth import MENTION_MIN_LEN
+from ed_twitter_spark.operators.mentions import mention_rows, mentions_sql
 
 COS_WINDOW = 25  # ±25 tokens, turn-local (prerank_ctx_window // 2)
 
@@ -77,7 +81,7 @@ def link_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     kb = synth.kb_alias(spark, sf_dir)
 
     # JVM-side tokenization + word-id coding + ±25 slices (mention excluded)
-    toks = F.split("text", r"\s+")
+    toks = toks_col()
     turns = t.select(
         "conv_id",
         "turn_idx",
@@ -90,21 +94,12 @@ def link_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     right = F.slice(
         "wids", p + 2, F.least(F.size("wids") - p - 1, F.lit(COS_WINDOW))
     )
-    m = (
-        turns.select(
-            "conv_id",
-            "turn_idx",
-            "wids",
-            F.posexplode("toks").alias("mention_idx", "mention"),
-        )
-        .where(F.length("mention") >= MENTION_MIN_LEN)
-        .select(
-            "conv_id",
-            "turn_idx",
-            p.cast("int").alias("mention_idx"),
-            "mention",
-            F.concat(left, right).alias("ctx_ids"),
-        )
+    m = mention_rows(turns, "toks", "conv_id", "turn_idx", "wids").select(
+        "conv_id",
+        "turn_idx",
+        p.cast("int").alias("mention_idx"),
+        "mention",
+        F.concat(left, right).alias("ctx_ids"),
     )
     # inner semantics: KB surfaces only
     cands = attach_candidates(m, kb).where(F.col("cand_ids").isNotNull())
@@ -188,7 +183,6 @@ def link_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def link_cosine_oracle_sql() -> str:
     from ed_twitter_spark import synth
-    from ed_twitter_spark.operators.mentions import mentions_sql
 
     return f"""
 WITH m AS ({mentions_sql()}),
@@ -204,8 +198,8 @@ wv AS (
 ),
 tok_pos AS (
   SELECT doc_id,
-         unnest(string_split_regex(text, '\\s+')) AS tok,
-         CAST(unnest(range(len(string_split_regex(text, '\\s+')))) AS INTEGER) AS pos
+         unnest({TOKS_SQL}) AS tok,
+         CAST(unnest(range(len({TOKS_SQL}))) AS INTEGER) AS pos
   FROM documents
 ),
 ctx AS (

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ed_twitter_spark.functions.hashing import TOKS_SQL, toks_col
+
 
 def kg_vertices(components: DataFrame) -> DataFrame:
     """(vertex_id, canonical_name, n_members, n_entities, n_surfaces).
@@ -3354,7 +3356,7 @@ def kg_open_relations(edges: DataFrame, transcripts: DataFrame) -> DataFrame:
     locality assumption).
     """
     t = transcripts.select(
-        "conv_id", "turn_idx", F.split("text", r"\s+").alias("toks")
+        "conv_id", "turn_idx", toks_col().alias("toks")
     )
     ev = edges.where(F.col("obj_vertex").isNotNull()).select(
         "conv_id", "turn_idx", "mention_idx", "obj_vertex"
@@ -3397,7 +3399,7 @@ def kg_open_relations_oracle_sql() -> str:
         _kg_edges_named_sql()
         + f""",
 reltr AS (
-  SELECT conv_id, turn_idx, string_split_regex(text, '\\s+') AS toks
+  SELECT conv_id, turn_idx, {TOKS_SQL} AS toks
   FROM ({synth.TRANSCRIPTS_SQL})
 ),
 relev AS (

@@ -29,7 +29,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ed_twitter_spark import synth
-from ed_twitter_spark.functions.hashing import toks_col
+from ed_twitter_spark.functions.hashing import toks_col, toks_sql
+from ed_twitter_spark.operators.mentions import detect_mentions, mention_rows, mentions_sql
 
 CAP = 100
 RLTD_MIN_FREQ = 30
@@ -41,20 +42,16 @@ RLTD_MIN_FREQ = 30
 
 _PART_ANCHORS_SQL = f"""
 SELECT tok AS mention, 'E0_' || tok AS ent_name
-FROM (SELECT unnest(string_split_regex(p_name, '\\s+')) AS tok FROM part)
-WHERE length(tok) >= {synth.MENTION_MIN_LEN}
+FROM (SELECT unnest({toks_sql('p_name')}) AS tok FROM part)
+WHERE {synth.is_mention_sql('tok')}
 """
 
 
 def _part_anchors(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = spark.read.parquet(f"{sf_dir}/part.parquet")
-    return (
-        part.select(F.explode(F.split("p_name", r"\s+")).alias("tok"))
-        .where(F.length("tok") >= synth.MENTION_MIN_LEN)
-        .select(
-            F.col("tok").alias("mention"),
-            F.concat(F.lit("E0_"), F.col("tok")).alias("ent_name"),
-        )
+    return mention_rows(part, toks_col("p_name"), tok="tok").select(
+        F.col("tok").alias("mention"),
+        F.concat(F.lit("E0_"), F.col("tok")).alias("ent_name"),
     )
 
 
@@ -209,8 +206,6 @@ FROM n LEFT JOIN redirects r ON n.norm0 = r.src_name
 def mention_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """preprocess_mention over a mixed-case mention stream: title-case
     all-caps forms, frequency tie-break, lower→canonical fallback."""
-    from ed_twitter_spark.operators.mentions import detect_mentions
-
     m = detect_mentions(synth.transcripts(spark, sf_dir)).select(
         "conv_id",
         "turn_idx",
@@ -298,8 +293,6 @@ LEFT JOIN low l ON l.low_key = lower(s2.cur2)
 
 
 def mention_normalize_sql() -> str:
-    from ed_twitter_spark.operators.mentions import mentions_sql
-
     return MENTION_NORMALIZE_SQL.format(mentions_sql=mentions_sql())
 
 
@@ -310,7 +303,6 @@ def mention_normalize_sql() -> str:
 
 def rltd_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ed_twitter_spark.operators.candidates import gen_candidates
-    from ed_twitter_spark.operators.mentions import detect_mentions
 
     m = detect_mentions(synth.transcripts(spark, sf_dir))
     kb = synth.kb_alias(spark, sf_dir)
@@ -357,8 +349,6 @@ FROM cands
 
 
 def rltd_filter_sql() -> str:
-    from ed_twitter_spark.operators.mentions import mentions_sql
-
     return RLTD_FILTER_SQL.format(mentions_sql=mentions_sql())
 
 

@@ -2,9 +2,12 @@
 
 Pipeline (SURVEY.md §3.3 "Spark lifecycle equivalent"):
 
-1. **window build** (W1-W5): `applyInPandas` over conv_id — sort turns by
-   turn_idx, build the conversation token stream, emit one row per mention
-   with its raw ±100 window sliced → stopword-filtered ±50 ids (W3), and the
+1. **window build** (W1-W5): the JVM splits each turn and lists its
+   mention positions once, with the package's one tokenizer and mention
+   test (`hashing.toks_col`, `mentions.mention_positions`); then
+   `applyInPandas` over (conv_id, segment) rebuilds the conversation token
+   stream from those tokens and emits one row per listed mention with its
+   raw ±100 window sliced → stopword-filtered ±50 ids (W3), and the
    turn-local ±3 relation window (W4). Exact slice chain of
    `gen_aida_train.py:113-127` → `ed_ranker.py:196-235`.
 2. **candidate attach** (J1): `candidates.attach_candidates` — the one
@@ -45,9 +48,10 @@ from ed_twitter_spark.functions.fixtures import (
     load_embedding_matrix,
     word_code,
 )
+from ed_twitter_spark.functions.hashing import toks_col
 from ed_twitter_spark.functions.text import is_important_word
 from ed_twitter_spark.operators.candidates import attach_candidates
-from ed_twitter_spark.synth import MENTION_MIN_LEN
+from ed_twitter_spark.operators.mentions import mention_positions
 
 RAW_WINDOW = 100  # ±100 raw tokens (gen_aida_train.py:113-127)
 CTX_WINDOW = 100  # filtered window total (main.py --ctx_window)
@@ -95,49 +99,52 @@ _TRIPLE_SCHEMA = StructType(
 # conversation's stream is cut into SEG_TOKENS-token segments, each sent to
 # its own task together with ±RAW_WINDOW halo tokens from the neighbours,
 # so a viral conversation parallelizes instead of becoming one straggler
-# task. Halo duplication overhead ≈ 2·RAW_WINDOW/SEG_TOKENS ≈ 5%.
+# task. Halo duplication overhead ≈ 2·RAW_WINDOW/SEG_TOKENS ≈ 5%. Read
+# when the plan is built, so a caller may change it first.
 SEG_TOKENS = 4096
 
-def build_mention_windows(
-    transcripts_df: DataFrame, n_vectors: int, seg_tokens: int = SEG_TOKENS
-) -> DataFrame:
+
+def build_mention_windows(transcripts_df: DataFrame, n_vectors: int) -> DataFrame:
     """Stage 1: ordered window build, halo-partitioned per conversation.
 
     Two steps, both shuffle-light:
 
-    1. **JVM-side segment assignment**: per-turn token/mention counts
-       (Arrow-vectorized) + running offsets (window function) place every
-       turn's token span on the conversation's global token axis; each turn
+    1. **JVM-side tokens and segment assignment**: each turn is split once
+       (``toks``, `hashing.toks_col`; null text is no tokens) and its
+       mention positions listed once (``ment_pos``,
+       `mentions.mention_positions`); running offsets (window function)
+       place every turn's token span on the conversation's global token
+       axis, and its mentions on the conversation's mention axis. Each turn
        is then exploded to the segment(s) whose ±RAW_WINDOW context range it
        overlaps. Skewed (viral) conversations fan out over
-       ceil(n_tokens/seg_tokens) independent tasks — the reference's own
+       ceil(n_tokens/SEG_TOKENS) independent tasks — the reference's own
        doc-chunking trick (`ed_ranker.py:253-256`) applied at window scope.
-    2. **grouped-map per (conv_id, segment)**: rebuild the local stream with
-       global positions, code each distinct token once (md5 memo), and slice
-       the ±100/±50 windows via O(log n) ``searchsorted`` probes over the
-       important-token position array. A mention is emitted only by its
-       owning segment; halo turns contribute context tokens only, so the
-       output is row-identical to an unpartitioned per-conversation build.
+    2. **grouped-map per (conv_id, segment)**: rebuild the local stream from
+       the received tokens with global positions, code each distinct token
+       once (md5 memo), and slice the ±100/±50 windows via O(log n)
+       ``searchsorted`` probes over the important-token position array. A
+       listed mention is emitted only by its owning segment; halo turns
+       contribute context tokens only, so the output is row-identical to an
+       unpartitioned per-conversation build.
     """
     from pyspark.sql import Window
 
     half_ctx = CTX_WINDOW // 2
+    seg_tokens = SEG_TOKENS
 
-    # per-turn token/mention counts in pure JVM column algebra (identical
-    # to the grouped map's Python .split() on the single-space transcript
-    # text — the mention_windows oracle and the sequential-parity test pin
-    # the equivalence); keeping this stage whole-stage-codegen removes an
-    # Arrow round trip over every turn
-    _toks = F.split("text", r"\s+")
     wconv = Window.partitionBy("conv_id").orderBy("turn_idx")
     before = wconv.rowsBetween(Window.unboundedPreceding, -1)
+    no_toks = F.array().cast("array<string>")
     turns = (
-        transcripts_df.select("conv_id", "turn_idx", "text", "doc_id")
-        .withColumn("ntok", F.size(_toks))
-        .withColumn(
-            "nment",
-            F.size(F.filter(_toks, lambda t: F.length(t) >= MENTION_MIN_LEN)),
+        transcripts_df.select(
+            "conv_id",
+            "turn_idx",
+            "doc_id",
+            F.coalesce(toks_col(), no_toks).alias("toks"),
         )
+        .withColumn("ment_pos", mention_positions("toks"))
+        .withColumn("ntok", F.size("toks"))
+        .withColumn("nment", F.size("ment_pos"))
         .withColumn("tok_off", F.coalesce(F.sum("ntok").over(before), F.lit(0)).cast("long"))
         .withColumn("ment_off", F.coalesce(F.sum("nment").over(before), F.lit(0)).cast("long"))
     )
@@ -152,90 +159,67 @@ def build_mention_windows(
     def per_segment(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("turn_idx")
         conv_id = pdf["conv_id"].iloc[0]
-        seg_id = int(pdf["seg"].iloc[0])
-        own_lo = seg_id * seg_tokens
+        own_lo = int(pdf["seg"].iloc[0]) * seg_tokens
         own_hi = own_lo + seg_tokens
-        wid_memo: dict[str, int] = {}
-        imp_memo: dict[str, bool] = {}
-
-        def wid(tok: str) -> int:
-            v = wid_memo.get(tok)
-            if v is None:
-                v = word_code(tok) % n_vectors
-                wid_memo[tok] = v
-            return v
-
-        def imp(tok: str) -> bool:
-            v = imp_memo.get(tok)
-            if v is None:
-                v = is_important_word(tok)
-                imp_memo[tok] = v
-            return v
-
-        # local stream over the received turns, on the global token axis
+        turns = list(
+            zip(pdf["turn_idx"], pdf["toks"], pdf["ment_pos"], pdf["doc_id"],
+                pdf["tok_off"], pdf["ment_off"])
+        )
+        # local stream over the received turns, on the global token axis;
+        # a turn's tokens start at stream index `start`
         stream: list[str] = []
-        gpos_list: list[int] = []
-        meta: list[tuple[int, int, int, int]] = []  # turn_idx, pos, doc_id, ment_off
-        turn_ids_map: dict[int, list[int]] = {}
-        for turn_idx, text, doc_id, tok_off, ment_off in zip(
-            pdf["turn_idx"], pdf["text"], pdf["doc_id"], pdf["tok_off"], pdf["ment_off"]
-        ):
-            toks = (text or "").split()
-            turn_ids_map[turn_idx] = [wid(t) for t in toks]
-            for p, t in enumerate(toks):
-                stream.append(t)
-                gpos_list.append(tok_off + p)
-                meta.append((turn_idx, p, doc_id, ment_off))
-
-        n = len(stream)
-        gpos = np.asarray(gpos_list, dtype=np.int64)
-        ids = np.fromiter((wid(t) for t in stream), dtype=np.int64, count=n)
+        starts, gpos_parts = [], []
+        for _, toks, _, _, tok_off, _ in turns:
+            starts.append(len(stream))
+            stream.extend(toks)
+            gpos_parts.append(np.arange(tok_off, tok_off + len(toks), dtype=np.int64))
+        gpos = np.concatenate(gpos_parts)
+        # each distinct token is coded and importance-tested once
+        codes = {tok: word_code(tok) % n_vectors for tok in set(stream)}
+        important = {tok for tok in codes if is_important_word(tok)}
+        ids = np.fromiter((codes[t] for t in stream), dtype=np.int64, count=len(stream))
         imp_idx = np.fromiter(
-            (i for i in range(n) if imp(stream[i])), dtype=np.int64
+            (i for i, t in enumerate(stream) if t in important), dtype=np.int64
         )
         imp_gpos = gpos[imp_idx]
         imp_ids = ids[imp_idx]
 
         rows = []
-        ment_in_turn: dict[int, int] = {}
-        for i, tok in enumerate(stream):
-            if len(tok) < MENTION_MIN_LEN:
-                continue
-            turn_idx, pos, doc_id, ment_off = meta[i]
-            g = gpos[i]
-            ordinal = ment_in_turn.get(turn_idx, 0)
-            ment_in_turn[turn_idx] = ordinal + 1
-            if not (own_lo <= g < own_hi):
-                continue  # halo context token — owned by a neighbour segment
-            # W1 raw ±100 (mention excluded) → P4 filter → W3 ±50 slice
-            # (gen_aida_train.py:113-127 → ed_ranker.py:196-204)
-            lo = np.searchsorted(imp_gpos, g - RAW_WINDOW, side="left")
-            mid_l = np.searchsorted(imp_gpos, g, side="left")
-            l_all = imp_ids[lo:mid_l]
-            l_ids = l_all[max(0, len(l_all) - half_ctx) :].tolist()
-            mid_r = np.searchsorted(imp_gpos, g, side="right")
-            hi = np.searchsorted(imp_gpos, g + RAW_WINDOW, side="right")
-            r_ids = imp_ids[mid_r:hi][:half_ctx].tolist()
-            # W4 turn-local ±3 relation window (sentence = turn)
-            turn_ids = turn_ids_map[turn_idx]
-            snd_l = turn_ids[max(0, pos - SND_WINDOW // 2) : pos]
-            snd_r = turn_ids[pos + 1 : pos + 1 + SND_WINDOW // 2]
-            snd_m = [turn_ids[pos]]
-            rows.append(
-                (
-                    conv_id,
-                    int(turn_idx),
-                    int(pos),
-                    int(ment_off) + ordinal,
-                    tok,
-                    l_ids,
-                    r_ids,
-                    snd_l,
-                    snd_m,
-                    snd_r,
-                    int(doc_id),
+        for (turn_idx, toks, ment_pos, doc_id, tok_off, ment_off), start in zip(
+            turns, starts
+        ):
+            for ordinal, pos in enumerate(ment_pos):
+                g = tok_off + pos
+                if not (own_lo <= g < own_hi):
+                    continue  # halo turn — owned by a neighbour segment
+                # W1 raw ±100 (mention excluded) → P4 filter → W3 ±50 slice
+                # (gen_aida_train.py:113-127 → ed_ranker.py:196-204)
+                lo = np.searchsorted(imp_gpos, g - RAW_WINDOW, side="left")
+                mid_l = np.searchsorted(imp_gpos, g, side="left")
+                l_all = imp_ids[lo:mid_l]
+                l_ids = l_all[max(0, len(l_all) - half_ctx) :].tolist()
+                mid_r = np.searchsorted(imp_gpos, g, side="right")
+                hi = np.searchsorted(imp_gpos, g + RAW_WINDOW, side="right")
+                r_ids = imp_ids[mid_r:hi][:half_ctx].tolist()
+                # W4 turn-local ±3 relation window (sentence = turn)
+                i = start + pos
+                snd_l = ids[start + max(0, pos - SND_WINDOW // 2) : i].tolist()
+                snd_r = ids[i + 1 : min(i + 1 + SND_WINDOW // 2, start + len(toks))].tolist()
+                rows.append(
+                    (
+                        conv_id,
+                        int(turn_idx),
+                        int(pos),
+                        int(ment_off) + ordinal,
+                        toks[pos],
+                        l_ids,
+                        r_ids,
+                        snd_l,
+                        [int(ids[i])],
+                        snd_r,
+                        int(doc_id),
+                    )
                 )
-            )
         return pd.DataFrame(rows, columns=[f.name for f in _WINDOW_SCHEMA.fields])
 
     # Explicit numbered repartition on the group keys: the segment rows are

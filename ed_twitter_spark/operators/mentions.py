@@ -4,9 +4,13 @@ Turn-local contexts follow the reference's tweets variant, which splits the
 whole tweet around the mention into left/right context strings
 (`deep-ed-pytorch/data_gen/gen_test_train_data/gen_from_tweets.py:156-168`);
 a turn plays the role of a tweet. The ±100-token *conversation-level* window
-(`gen_aida_train.py:113-127`) is built separately in the kernel path
-(operators/windows.py) where token streams cross turn boundaries.
+(`gen_aida_train.py:113-127`) is built by `linker.build_mention_windows`,
+whose token streams cross turn boundaries; it takes each turn's tokens and
+mention positions from :func:`mention_positions`.
 
+This is the one module that turns a token array (`hashing.toks_col`) into
+mention rows (:func:`mention_rows`) or mention positions
+(:func:`mention_positions`); the mention test itself is `synth.is_mention`.
 Everything here is pure DataFrame algebra — posexplode + slice — so Catalyst
 prunes columns and pushes the length filter into the scan; no Python runs
 per row.
@@ -14,10 +18,27 @@ per row.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ed_twitter_spark.synth import MENTION_MIN_LEN
+from ed_twitter_spark.functions.hashing import TOKS_SQL, toks_col
+from ed_twitter_spark.synth import TRANSCRIPTS_SQL, is_mention, is_mention_sql
+
+
+def mention_rows(
+    df: DataFrame, toks: str | Column, *keep: str, pos: str = "mention_idx", tok: str = "mention"
+) -> DataFrame:
+    """One row per mention token of the token array ``toks``: the ``keep``
+    columns, the token's 0-based position ``pos`` and the token ``tok``."""
+    return df.select(*keep, F.posexplode(toks).alias(pos, tok)).where(is_mention(F.col(tok)))
+
+
+def mention_positions(toks: str | Column) -> Column:
+    """The 0-based positions of the mention tokens in ``toks``, ascending."""
+    return F.filter(
+        F.transform(toks, lambda t, i: F.when(is_mention(t), i)),
+        lambda i: i.isNotNull(),
+    )
 
 
 def detect_mentions(transcripts_df: DataFrame) -> DataFrame:
@@ -27,18 +48,9 @@ def detect_mentions(transcripts_df: DataFrame) -> DataFrame:
     tokens, like the reference's word offsets).
     """
     toks = transcripts_df.select(
-        "conv_id",
-        "turn_idx",
-        "doc_id",
-        F.split("text", r"\s+").alias("toks"),
+        "conv_id", "turn_idx", "doc_id", toks_col().alias("toks")
     )
-    exploded = toks.select(
-        "conv_id",
-        "turn_idx",
-        "doc_id",
-        "toks",
-        F.posexplode("toks").alias("mention_idx", "mention"),
-    ).where(F.length("mention") >= MENTION_MIN_LEN)
+    exploded = mention_rows(toks, "toks", "conv_id", "turn_idx", "doc_id", "toks")
     return exploded.select(
         "conv_id",
         "turn_idx",
@@ -61,7 +73,7 @@ MENTIONS_SQL_TEMPLATE = """
 WITH transcripts AS ({transcripts_sql}),
 tk AS (
   SELECT conv_id, turn_idx, doc_id,
-         string_split_regex(text, '\\s+') AS toks
+         {toks} AS toks
   FROM transcripts
 ),
 m AS (
@@ -75,13 +87,13 @@ SELECT conv_id, turn_idx, mention_idx, mention,
        COALESCE(array_to_string(list_slice(toks, mention_idx + 2, len(toks)), ' '), '') AS rctx,
        doc_id
 FROM m
-WHERE length(mention) >= {min_len}
+WHERE {is_mention}
 """
 
 
 def mentions_sql() -> str:
-    from ed_twitter_spark.synth import TRANSCRIPTS_SQL
-
     return MENTIONS_SQL_TEMPLATE.format(
-        transcripts_sql=TRANSCRIPTS_SQL, min_len=MENTION_MIN_LEN
+        transcripts_sql=TRANSCRIPTS_SQL,
+        toks=TOKS_SQL,
+        is_mention=is_mention_sql("mention"),
     )

@@ -53,6 +53,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ed_twitter_spark import synth
+from ed_twitter_spark.functions.hashing import TOKS_SQL, toks_col
 from ed_twitter_spark.operators.cosine_linker import COS_WINDOW
 from ed_twitter_spark.operators.mentions import detect_mentions, mentions_sql
 
@@ -87,7 +88,7 @@ def rank_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = detect_mentions(synth.transcripts(spark, sf_dir))
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     toks = docs.select(
-        "doc_id", F.posexplode(F.split("text", r"\s+")).alias("pos", "tok")
+        "doc_id", F.posexplode(toks_col()).alias("pos", "tok")
     )
     ctx = (
         m.join(
@@ -332,8 +333,8 @@ tok_pos AS (
          CAST(('0x' || substr(md5(tok), 1, 6)) AS BIGINT) % nv.n AS wvid
   FROM (
     SELECT doc_id,
-           unnest(string_split_regex(text, '\\s+')) AS tok,
-           CAST(unnest(range(len(string_split_regex(text, '\\s+')))) AS INTEGER) AS pos
+           unnest({TOKS_SQL}) AS tok,
+           CAST(unnest(range(len({TOKS_SQL}))) AS INTEGER) AS pos
     FROM documents
   ) CROSS JOIN nv
 ),

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from ed_twitter_spark import synth
 from ed_twitter_spark.caching import persist_tracked
-from ed_twitter_spark.functions.hashing import TOKS_SQL
+from ed_twitter_spark.functions.hashing import TOKS_SQL, toks_col
 
 N_PROBES = 100
 POW = 0.6
@@ -48,7 +48,7 @@ def negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     wc = (
-        docs.select(F.explode(F.split("text", r"\s+")).alias("word"))
+        docs.select(F.explode(toks_col()).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
         .where(F.col("freq") >= MIN_FREQ)

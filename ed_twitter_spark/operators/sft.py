@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ed_twitter_spark import synth
+from ed_twitter_spark.functions.hashing import toks_col, toks_sql
 
 RENDER_LAST_TURNS = 8
 
@@ -70,8 +71,8 @@ def sft_pairs_df(t: DataFrame) -> DataFrame:
             "prompt",
             "response_turn_idx",
             "response",
-            F.size(F.split("prompt", r"\s+")).cast("long").alias("prompt_tokens"),
-            F.size(F.split("response", r"\s+")).cast("long").alias("response_tokens"),
+            F.size(toks_col("prompt")).cast("long").alias("prompt_tokens"),
+            F.size(toks_col("response")).cast("long").alias("response_tokens"),
         )
     )
 
@@ -95,8 +96,8 @@ SELECT u.conv_id,
        u.text                                        AS prompt,
        u.response_turn_idx,
        a.text                                        AS response,
-       CAST(len(string_split_regex(u.text, '\\s+')) AS BIGINT) AS prompt_tokens,
-       CAST(len(string_split_regex(a.text, '\\s+')) AS BIGINT) AS response_tokens
+       CAST(len({toks_sql('u.text')}) AS BIGINT) AS prompt_tokens,
+       CAST(len({toks_sql('a.text')}) AS BIGINT) AS response_tokens
 FROM nxt u
 JOIN t a ON a.conv_id = u.conv_id AND a.turn_idx = u.response_turn_idx
 WHERE u.role = 'user' AND u.response_turn_idx IS NOT NULL
@@ -187,7 +188,7 @@ def preference_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     a downstream reward model can re-rank."""
     p = sft_pairs_df(synth.transcripts(spark, sf_dir))
     key = F.array_join(
-        F.slice(F.split("prompt", r"\s+"), 1, PREF_PREFIX_TOKENS), " "
+        F.slice(toks_col("prompt"), 1, PREF_PREFIX_TOKENS), " "
     )
     w = Window.partitionBy("block_key").orderBy(
         F.col("response_tokens").desc(),
@@ -217,10 +218,10 @@ PREFERENCE_PAIRS_SQL = f"""
 WITH p AS ({SFT_PAIRS_SQL}),
 ranked AS (
   SELECT p.*,
-         array_to_string(string_split_regex(prompt, '\\s+')[1:{PREF_PREFIX_TOKENS}], ' ')
+         array_to_string({toks_sql('prompt')}[1:{PREF_PREFIX_TOKENS}], ' ')
            AS block_key,
          ROW_NUMBER() OVER (
-           PARTITION BY array_to_string(string_split_regex(prompt, '\\s+')[1:{PREF_PREFIX_TOKENS}], ' ')
+           PARTITION BY array_to_string({toks_sql('prompt')}[1:{PREF_PREFIX_TOKENS}], ' ')
            ORDER BY response_tokens DESC, conv_id, prompt_turn_idx
          ) AS rn
   FROM p
@@ -265,14 +266,14 @@ def tool_grounding_df(t: DataFrame) -> DataFrame:
         .select(
             "conv_id",
             F.col("turn_idx").alias("tool_turn_idx"),
-            F.array_distinct(F.split("text", r"\s+")).alias("tool_toks"),
+            F.array_distinct(toks_col()).alias("tool_toks"),
             "answer_turn_idx",
         )
     )
     answers = t.select(
         "conv_id",
         F.col("turn_idx").alias("answer_turn_idx"),
-        F.array_distinct(F.split("text", r"\s+")).alias("ans_toks"),
+        F.array_distinct(toks_col()).alias("ans_toks"),
     )
     shared = F.size(
         F.filter("ans_toks", lambda x: F.array_contains("tool_toks", x))
@@ -307,8 +308,8 @@ nxt AS (
 ),
 j AS (
   SELECT g.conv_id, g.turn_idx AS tool_turn_idx, g.answer_turn_idx,
-         list_distinct(string_split_regex(g.text, '\\s+')) AS tool_toks,
-         list_distinct(string_split_regex(a.text, '\\s+')) AS ans_toks
+         list_distinct({toks_sql('g.text')}) AS tool_toks,
+         list_distinct({toks_sql('a.text')}) AS ans_toks
   FROM nxt g
   JOIN t a ON a.conv_id = g.conv_id AND a.turn_idx = g.answer_turn_idx
   WHERE g.role = 'tool' AND g.answer_turn_idx IS NOT NULL

@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ed_twitter_spark import synth
-from ed_twitter_spark.functions.hashing import h32_col, h32_sql
+from ed_twitter_spark.functions.hashing import TOKS_SQL, h32_col, h32_sql, toks_col
 from ed_twitter_spark.operators.hyperlinks import hyperlink_contexts
 from ed_twitter_spark.operators.sampling import NEGATIVE_SAMPLING_SQL, negative_sampling
 
@@ -1115,7 +1115,7 @@ def _word_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return (
-        docs.select(F.explode(F.split("text", r"\s+")).alias("word"))
+        docs.select(F.explode(toks_col()).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
         .where(F.col("freq") >= MIN_FREQ)
@@ -1232,7 +1232,6 @@ def train_entity_epoch_nce(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ppow_sql() -> str:
-    from ed_twitter_spark.functions.hashing import TOKS_SQL
     from ed_twitter_spark.operators.sampling import MIN_FREQ, POW, W_SCALE
 
     return f"""

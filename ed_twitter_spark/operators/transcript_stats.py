@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ed_twitter_spark import synth
+from ed_twitter_spark.functions.hashing import TOKS_SQL, toks_col, toks_sql
 
 
 def conversation_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -200,7 +201,7 @@ def conv_context_budget_df(t: DataFrame) -> DataFrame:
     ``conversation_stats``. A turn longer than the whole budget yields
     fit_turns = 0 for that conversation's tail, never a partial turn.
     """
-    ntok = F.size(F.split("text", r"\s+"))
+    ntok = F.size(toks_col())
     w = (
         Window.partitionBy("conv_id")
         .orderBy(F.desc("turn_idx"))
@@ -237,8 +238,8 @@ CONV_CONTEXT_BUDGET_SQL = f"""
 WITH t AS ({synth.TRANSCRIPTS_SQL}),
 g AS (
   SELECT conv_id,
-         len(string_split_regex(text, '\\s+')) AS ntok,
-         SUM(len(string_split_regex(text, '\\s+'))) OVER (
+         len({TOKS_SQL}) AS ntok,
+         SUM(len({TOKS_SQL})) OVER (
            PARTITION BY conv_id ORDER BY turn_idx DESC
            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS rsum
   FROM t
@@ -423,7 +424,7 @@ def echo_profile(transcripts: DataFrame) -> DataFrame:
     def bigrams(col: str):
         # adjacent-pair zip of the token array with its own 1-shift —
         # bigram i = toks[i] + ' ' + toks[i+1], no explode
-        toks = F.split(F.lower(F.trim(F.col(col))), r"\s+")
+        toks = toks_col(F.lower(F.trim(F.col(col))))
         n = F.greatest(F.size(toks) - 1, F.lit(0))
         return F.array_distinct(
             F.zip_with(
@@ -478,8 +479,8 @@ lagged AS (
 ),
 pairs AS (
   SELECT conv_id, turn_idx,
-         string_split_regex(lower(trim(text)), '\\s+')      AS ta,
-         string_split_regex(lower(trim(prev_text)), '\\s+') AS tp
+         {toks_sql('lower(trim(text))')}      AS ta,
+         {toks_sql('lower(trim(prev_text))')} AS tp
   FROM lagged
   WHERE role = 'assistant' AND prev_role = 'user'
 ),
@@ -544,7 +545,7 @@ def key_turns(transcripts: DataFrame) -> DataFrame:
     t = transcripts.select(
         "conv_id",
         "turn_idx",
-        F.array_distinct(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias(
+        F.array_distinct(toks_col(F.lower(F.trim(F.col("text"))))).alias(
             "toks"
         ),
     )
@@ -638,7 +639,7 @@ s{i} AS (
 WITH tr AS ({synth.TRANSCRIPTS_SQL}),
 t AS (
   SELECT conv_id, turn_idx,
-         list_distinct(string_split_regex(lower(trim(text)), '\\s+')) AS toks
+         list_distinct({toks_sql('lower(trim(text))')}) AS toks
   FROM tr
 ),
 e AS (

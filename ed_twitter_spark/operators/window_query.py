@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ed_twitter_spark import synth
+from ed_twitter_spark.functions.hashing import TOKS_SQL
 from ed_twitter_spark.functions.text import STOPWORDS
 from ed_twitter_spark.operators.linker import CTX_WINDOW, RAW_WINDOW, build_mention_windows
 
@@ -50,8 +51,8 @@ MENTION_WINDOWS_SQL = f"""
 WITH transcripts AS ({synth.TRANSCRIPTS_SQL}),
 tok AS (
   SELECT conv_id, turn_idx,
-         unnest(string_split_regex(text, '\\s+')) AS tok,
-         CAST(unnest(range(len(string_split_regex(text, '\\s+')))) AS INTEGER) AS pos
+         unnest({TOKS_SQL}) AS tok,
+         CAST(unnest(range(len({TOKS_SQL}))) AS INTEGER) AS pos
   FROM transcripts
 ),
 g AS (
@@ -65,7 +66,7 @@ g AS (
 ),
 m AS (
   SELECT conv_id, turn_idx, pos AS mention_idx, tok AS mention, gpos
-  FROM g WHERE length(tok) >= {synth.MENTION_MIN_LEN}
+  FROM g WHERE {synth.is_mention_sql('tok')}
 ),
 lwin AS (
   SELECT m.conv_id, m.turn_idx, m.mention_idx, t.gpos, t.wid,

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ed_twitter_spark import synth
+from ed_twitter_spark.functions.hashing import TOKS_SQL, toks_col
 from ed_twitter_spark.operators import candidates as cand_ops
 from ed_twitter_spark.operators import eval as eval_ops
 from ed_twitter_spark.operators import mentions as mention_ops
@@ -358,9 +359,9 @@ def q_ent_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_WORD_COUNTS_ORACLE = """
+_WORD_COUNTS_ORACLE = f"""
 WITH tok AS (
-  SELECT unnest(string_split_regex(text, '\\s+')) AS word FROM documents
+  SELECT unnest({TOKS_SQL}) AS word FROM documents
 )
 SELECT word, CAST(COUNT(*) AS BIGINT) AS freq
 FROM tok GROUP BY word HAVING COUNT(*) >= 10
@@ -372,16 +373,16 @@ def q_word_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A5: word unigram counts, filter ≥10 (w_freq_gen.py:19-49)."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return (
-        docs.select(F.explode(F.split("text", r"\s+")).alias("word"))
+        docs.select(F.explode(toks_col()).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
         .where(F.col("freq") >= 10)
     )
 
 
-_DOC_WORD_REPR_ORACLE = """
+_DOC_WORD_REPR_ORACLE = f"""
 WITH tok AS (
-  SELECT doc_id, unnest(string_split_regex(text, '\\s+')) AS word FROM documents
+  SELECT doc_id, unnest({TOKS_SQL}) AS word FROM documents
 )
 SELECT doc_id,
        array_to_string(list_sort(list(DISTINCT word)), ' ') AS words,
@@ -395,7 +396,7 @@ def q_doc_word_repr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A6: per-page word aggregation (gen_ent_wiki_w_repr.py:79-103); emitted
     as sorted-distinct for order-stable comparison."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    tok = docs.select("doc_id", F.explode(F.split("text", r"\s+")).alias("word"))
+    tok = docs.select("doc_id", F.explode(toks_col()).alias("word"))
     return tok.groupBy("doc_id").agg(
         F.array_join(F.array_sort(F.collect_set("word")), " ").alias("words"),
         F.countDistinct("word").alias("n_distinct"),

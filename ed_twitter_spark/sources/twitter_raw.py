@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ed_twitter_spark import synth
+from ed_twitter_spark.functions.hashing import toks_col
 from ed_twitter_spark.functions.text import split_in_words
 from ed_twitter_spark.operators.candidates import attach_candidates
 
@@ -158,10 +159,10 @@ def mention_context_lines(resolved: DataFrame, kb: DataFrame) -> DataFrame:
     arrays in rank order, capped here at CAND_CAP)."""
     ws = F.lit("EMPTYCTXT")
     lctx_arr = F.filter(
-        F.split(F.expr("substring(text, 1, start_idx)"), r"\s+"), lambda t: t != ""
+        toks_col(F.expr("substring(text, 1, start_idx)")), lambda t: t != ""
     )
     rctx_arr = F.filter(
-        F.split(F.expr("substring(text, end_idx + 1)"), r"\s+"), lambda t: t != ""
+        toks_col(F.expr("substring(text, end_idx + 1)")), lambda t: t != ""
     )
     base = resolved.select(
         "tweet_id",

@@ -24,7 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ed_twitter_spark.synth import MENTION_MIN_LEN
+from ed_twitter_spark.functions.hashing import toks_col
+from ed_twitter_spark.operators.mentions import mention_positions
 
 WATERMARK = "2 minutes"  # late-data horizon (event time)
 WINDOW = "1 minute"  # tumbling aggregate window
@@ -62,11 +63,7 @@ def mention_rate(stream: DataFrame) -> DataFrame:
     toks = stream.select(
         "conv_id",
         "ts",
-        F.size(
-            F.filter(
-                F.split("text", r"\s+"), lambda t: F.length(t) >= MENTION_MIN_LEN
-            )
-        ).alias("n_mentions"),
+        F.size(mention_positions(toks_col())).alias("n_mentions"),
     )
     return (
         toks.groupBy(F.window("ts", WINDOW), "conv_id")

@@ -30,10 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# Tokens shorter than this are treated as non-mention function words
-# (the reference drops len<2 tokens + stopwords, `nel/utils.py:44-52`;
-# our synthetic corpus uses length as the content-word predicate).
-MENTION_MIN_LEN = 4
+from ed_twitter_spark.functions.hashing import TOKS_SQL, toks_col
 
 # ---------------------------------------------------------------------------
 # opt-in shared-derivation cache (pipeline semantics for the bench harness)
@@ -80,6 +77,21 @@ def shared(key: str, sf_dir: str, build):
 # ---------------------------------------------------------------------------
 # shared scalar expressions (must be semantically identical in both engines)
 # ---------------------------------------------------------------------------
+
+# Tokens shorter than this are treated as non-mention function words
+# (the reference drops len<2 tokens + stopwords, `nel/utils.py:44-52`;
+# our synthetic corpus uses length as the content-word predicate).
+MENTION_MIN_LEN = 4
+
+
+def is_mention_sql(tok_expr: str) -> str:
+    """DuckDB: the mention test of one token."""
+    return f"length({tok_expr}) >= {MENTION_MIN_LEN}"
+
+
+def is_mention(tok_col):
+    """Spark twin of :func:`is_mention_sql`."""
+    return F.length(tok_col) >= MENTION_MIN_LEN
 
 
 def ent_id_expr_sql(name_expr: str) -> str:
@@ -162,22 +174,22 @@ def _transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
 ANCHORS_SQL = f"""
 WITH toks AS (
   SELECT doc_id,
-         unnest(string_split_regex(text, '\\s+'))                       AS tok,
-         CAST(unnest(range(len(string_split_regex(text, '\\s+')))) AS INTEGER) AS pos
+         unnest({TOKS_SQL})                       AS tok,
+         CAST(unnest(range(len({TOKS_SQL}))) AS INTEGER) AS pos
   FROM documents
 )
 SELECT doc_id, pos, tok AS mention,
        'E' || CAST({gold_suffix_sql('doc_id', 'pos')} AS VARCHAR) || '_' || tok AS ent_name
 FROM toks
-WHERE length(tok) >= {MENTION_MIN_LEN}
+WHERE {is_mention_sql('tok')}
 """
 
 
 def anchors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ed_twitter_spark.operators.mentions import mention_rows
+
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    t = docs.select(
-        "doc_id", F.posexplode(F.split("text", r"\s+")).alias("pos", "tok")
-    ).where(F.length("tok") >= MENTION_MIN_LEN)
+    t = mention_rows(docs, toks_col(), "doc_id", pos="pos", tok="tok")
     suffix = gold_suffix_col(F.col("doc_id"), F.col("pos"))
     return t.select(
         "doc_id",

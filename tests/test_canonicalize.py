@@ -103,6 +103,21 @@ def test_star_beats_hashmin_on_chain(spark):
     assert s_star["rounds"] < s_hash["rounds"] / 2
 
 
+def test_cc_fails_loudly_without_convergence(spark):
+    """A distributed loop that runs out of rounds raises instead of
+    returning partial labels: the 24-edge chain needs more than 5 rounds
+    on both arms."""
+    import pytest
+
+    edges = [(f"p{i:03d}", f"p{i + 1:03d}") for i in range(24)]
+    df = spark.createDataFrame(edges, ["src", "dst"])
+    for algorithm in ("hashmin", "star"):
+        with pytest.raises(RuntimeError, match="did not converge in 5 rounds"):
+            connected_components(
+                df, driver_max_edges=0, max_iter=5, algorithm=algorithm
+            )
+
+
 def test_cc_byte_gate_forces_distributed(spark):
     """Few edges but oversized node strings must skip the driver collect:
     the byte probe routes to the distributed loop (rounds > 0) and labels

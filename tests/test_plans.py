@@ -642,3 +642,27 @@ def test_open_relations_no_cartesian_conv_keyed(spark):
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+
+
+def test_one_tokenizer_and_one_mention_test():
+    """Structural guard: the whitespace tokenizer is defined only in
+    ``functions/hashing.py`` (``toks_col`` / ``toks_sql``) and the mention
+    test only in ``synth.py`` (``is_mention`` / ``is_mention_sql``), so a
+    second mention detector cannot grow back unnoticed."""
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "ed_twitter_spark"
+    split_col = re.compile(r"F\.split\([^;]{0,200}?r\"\\s\+\"", re.S)
+    split_sql = re.compile(r"string_split_regex\([^;]{0,200}?'\\\\s\+'", re.S)
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        src = path.read_text()
+        rel = path.relative_to(pkg).as_posix()
+        if rel != "synth.py" and "MENTION_MIN_LEN" in src:
+            offenders.append(f"{rel}: MENTION_MIN_LEN")
+        if rel != "functions/hashing.py":
+            offenders += [f"{rel}: {m.group(0)!r}" for m in split_col.finditer(src)]
+            offenders += [f"{rel}: {m.group(0)!r}" for m in split_sql.finditer(src)]
+    assert not offenders, offenders
+    linker_src = (pkg / "operators" / "linker.py").read_text()
+    assert ".split(" not in linker_src
