@@ -49,9 +49,8 @@ WHERE {synth.is_mention_sql('tok')}
 
 def _part_anchors(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = spark.read.parquet(f"{sf_dir}/part.parquet")
-    return mention_rows(part, toks_col("p_name"), tok="tok").select(
-        F.col("tok").alias("mention"),
-        F.concat(F.lit("E0_"), F.col("tok")).alias("ent_name"),
+    return mention_rows(part, toks_col("p_name")).select(
+        "mention", F.concat(F.lit("E0_"), F.col("mention")).alias("ent_name")
     )
 
 

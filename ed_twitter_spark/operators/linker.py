@@ -3,8 +3,8 @@
 Pipeline (SURVEY.md §3.3 "Spark lifecycle equivalent"):
 
 1. **window build** (W1-W5): the JVM splits each turn and lists its
-   mention positions once, with the package's one tokenizer and mention
-   test (`hashing.toks_col`, `mentions.mention_positions`); then
+   mention positions with the package's one tokenizer and mention test
+   (`hashing.toks_col`, `mentions.mention_positions`); then
    `applyInPandas` over (conv_id, segment) rebuilds the conversation token
    stream from those tokens and emits one row per listed mention with its
    raw ±100 window sliced → stopword-filtered ±50 ids (W3), and the
@@ -109,16 +109,18 @@ def build_mention_windows(transcripts_df: DataFrame, n_vectors: int) -> DataFram
 
     Two steps, both shuffle-light:
 
-    1. **JVM-side tokens and segment assignment**: each turn is split once
-       (``toks``, `hashing.toks_col`; null text is no tokens) and its
-       mention positions listed once (``ment_pos``,
-       `mentions.mention_positions`); running offsets (window function)
-       place every turn's token span on the conversation's global token
-       axis, and its mentions on the conversation's mention axis. Each turn
-       is then exploded to the segment(s) whose ±RAW_WINDOW context range it
-       overlaps. Skewed (viral) conversations fan out over
-       ceil(n_tokens/SEG_TOKENS) independent tasks — the reference's own
-       doc-chunking trick (`ed_ranker.py:253-256`) applied at window scope.
+    1. **JVM-side tokens and segment assignment**: each turn's token and
+       mention counts (sizes of `hashing.toks_col` and
+       `mentions.mention_positions`; null text is no tokens) give running
+       offsets (window function) that place its token span on the
+       conversation's global token axis, and its mentions on the
+       conversation's mention axis. Each turn is then exploded to the
+       segment(s) whose ±RAW_WINDOW context range it overlaps. Skewed
+       (viral) conversations fan out over ceil(n_tokens/SEG_TOKENS)
+       independent tasks — the reference's own doc-chunking trick
+       (`ed_ranker.py:253-256`) applied at window scope. Only the text
+       crosses the exchanges; after the segment exchange the same helpers
+       rebuild each turn's ``toks`` and ``ment_pos`` arrays.
     2. **grouped-map per (conv_id, segment)**: rebuild the local stream from
        the received tokens with global positions, code each distinct token
        once (md5 memo), and slice the ±100/±50 windows via O(log n)
@@ -134,17 +136,16 @@ def build_mention_windows(transcripts_df: DataFrame, n_vectors: int) -> DataFram
 
     wconv = Window.partitionBy("conv_id").orderBy("turn_idx")
     before = wconv.rowsBetween(Window.unboundedPreceding, -1)
-    no_toks = F.array().cast("array<string>")
+    toks = F.coalesce(toks_col(), F.array().cast("array<string>"))
     turns = (
         transcripts_df.select(
             "conv_id",
             "turn_idx",
             "doc_id",
-            F.coalesce(toks_col(), no_toks).alias("toks"),
+            "text",
+            F.size(toks).alias("ntok"),
+            F.size(mention_positions(toks)).alias("nment"),
         )
-        .withColumn("ment_pos", mention_positions("toks"))
-        .withColumn("ntok", F.size("toks"))
-        .withColumn("nment", F.size("ment_pos"))
         .withColumn("tok_off", F.coalesce(F.sum("ntok").over(before), F.lit(0)).cast("long"))
         .withColumn("ment_off", F.coalesce(F.sum("nment").over(before), F.lit(0)).cast("long"))
     )
@@ -161,7 +162,7 @@ def build_mention_windows(transcripts_df: DataFrame, n_vectors: int) -> DataFram
         conv_id = pdf["conv_id"].iloc[0]
         own_lo = int(pdf["seg"].iloc[0]) * seg_tokens
         own_hi = own_lo + seg_tokens
-        turns = list(
+        turn_rows = list(
             zip(pdf["turn_idx"], pdf["toks"], pdf["ment_pos"], pdf["doc_id"],
                 pdf["tok_off"], pdf["ment_off"])
         )
@@ -169,7 +170,7 @@ def build_mention_windows(transcripts_df: DataFrame, n_vectors: int) -> DataFram
         # a turn's tokens start at stream index `start`
         stream: list[str] = []
         starts, gpos_parts = [], []
-        for _, toks, _, _, tok_off, _ in turns:
+        for _, toks, _, _, tok_off, _ in turn_rows:
             starts.append(len(stream))
             stream.extend(toks)
             gpos_parts.append(np.arange(tok_off, tok_off + len(toks), dtype=np.int64))
@@ -186,7 +187,7 @@ def build_mention_windows(transcripts_df: DataFrame, n_vectors: int) -> DataFram
 
         rows = []
         for (turn_idx, toks, ment_pos, doc_id, tok_off, ment_off), start in zip(
-            turns, starts
+            turn_rows, starts
         ):
             for ordinal, pos in enumerate(ment_pos):
                 g = tok_off + pos
@@ -231,8 +232,15 @@ def build_mention_windows(transcripts_df: DataFrame, n_vectors: int) -> DataFram
     n_parts = max(
         2 * transcripts_df.sparkSession.sparkContext.defaultParallelism, 8
     )
+    # the turn's text, not its token arrays, crosses the two exchanges (less
+    # than half the bytes); the arrays are rebuilt on the receiving side
     return (
         segmented.repartition(n_parts, "conv_id", "seg")
+        .select(
+            "conv_id", "seg", "turn_idx", "doc_id", "tok_off", "ment_off",
+            toks.alias("toks"),
+        )
+        .withColumn("ment_pos", mention_positions("toks"))
         .groupBy("conv_id", "seg")
         .applyInPandas(per_segment, schema=_WINDOW_SCHEMA)
     )

@@ -25,12 +25,13 @@ from ed_twitter_spark.functions.hashing import TOKS_SQL, toks_col
 from ed_twitter_spark.synth import TRANSCRIPTS_SQL, is_mention, is_mention_sql
 
 
-def mention_rows(
-    df: DataFrame, toks: str | Column, *keep: str, pos: str = "mention_idx", tok: str = "mention"
-) -> DataFrame:
+def mention_rows(df: DataFrame, toks: str | Column, *keep: str) -> DataFrame:
     """One row per mention token of the token array ``toks``: the ``keep``
-    columns, the token's 0-based position ``pos`` and the token ``tok``."""
-    return df.select(*keep, F.posexplode(toks).alias(pos, tok)).where(is_mention(F.col(tok)))
+    columns, the token's 0-based position ``mention_idx`` and the token
+    ``mention``."""
+    return df.select(*keep, F.posexplode(toks).alias("mention_idx", "mention")).where(
+        is_mention(F.col("mention"))
+    )
 
 
 def mention_positions(toks: str | Column) -> Column:

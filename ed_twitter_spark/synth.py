@@ -189,13 +189,13 @@ def anchors(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ed_twitter_spark.operators.mentions import mention_rows
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    t = mention_rows(docs, toks_col(), "doc_id", pos="pos", tok="tok")
-    suffix = gold_suffix_col(F.col("doc_id"), F.col("pos"))
+    t = mention_rows(docs, toks_col(), "doc_id")
+    suffix = gold_suffix_col(F.col("doc_id"), F.col("mention_idx"))
     return t.select(
         "doc_id",
-        F.col("pos").cast("int").alias("pos"),
-        F.col("tok").alias("mention"),
-        F.concat(F.lit("E"), suffix.cast("string"), F.lit("_"), F.col("tok")).alias("ent_name"),
+        F.col("mention_idx").cast("int").alias("pos"),
+        "mention",
+        F.concat(F.lit("E"), suffix.cast("string"), F.lit("_"), F.col("mention")).alias("ent_name"),
     )
 
 
