@@ -19,6 +19,17 @@ Resume contract: a stage is *complete* iff its lineage row exists and its
 recorded fingerprint equals the fingerprint recomputed from the current code
 version and the fingerprints of its (possibly re-run) inputs. Any upstream
 change therefore invalidates exactly the downstream suffix of the DAG.
+:func:`read_lineages` reads the lineage rows of every stage a run needs in
+one typed read (one Spark job, no schema inference), and a sidecar that is
+missing, partial (a write that died in ``_temporary/``) or corrupt counts as
+an absent stage. ``write_stage`` deletes the stage's old lineage before it
+writes the data and writes the new row last, so a write killed at any point
+leaves the stage absent rather than complete over partial data.
+
+Catalog reads are typed, so none starts a schema-inference job: the
+sidecars by their DDL, a stage's data by the schema its lineage row records
+(``read_stage(..., schema=)``), and ``write_stage``'s re-read of what it
+wrote by the schema of the frame written.
 
 The reference's analog is its torch.save memo-cache of parsed indexes
 (`deep-ed-pytorch/entities/ent_name2id_freq/ent_name_id.py:41-48,93`,
@@ -35,6 +46,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def _iceberg_catalog(spark: SparkSession) -> str | None:
@@ -43,6 +55,12 @@ def _iceberg_catalog(spark: SparkSession) -> str | None:
         if k.startswith("spark.sql.catalog.") and v.endswith("SparkCatalog"):
             return k.split(".")[3]
     return None
+
+
+def _hadoop_path(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` for ``path`` under the session's Hadoop config."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
 
 
 def fingerprint(*parts: str) -> str:
@@ -88,13 +106,17 @@ def write_stage(
     record (also written as a 1-row table).
     """
     spark = df.sparkSession
+    # the lineage row is the commit marker: drop the old one first, so a
+    # write that dies before the new row lands leaves the stage absent
+    fs, lineage = _hadoop_path(spark, f"{root}/{stage}/_lineage")
+    fs.delete(lineage, True)
     cat = _iceberg_catalog(spark)
     if cat is not None:
         df.writeTo(f"{cat}.{root}.{stage}").createOrReplace()
         written = spark.read.table(f"{cat}.{root}.{stage}")
     else:
         df.write.mode("overwrite").parquet(data_path(root, stage))
-        written = spark.read.parquet(data_path(root, stage))
+        written = spark.read.schema(df.schema).parquet(data_path(root, stage))
 
     # per-partition metrics over the data *as persisted* (scan partitioning):
     # one aggregation job whose result is at most one row per scan
@@ -142,21 +164,44 @@ def write_partitioned(
     df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
 
 
+def read_lineages(spark: SparkSession, root: str, stages: list[str]) -> dict[str, dict]:
+    """``{stage: lineage record}`` for every named stage that was fully
+    written, in one Spark job: the ``_lineage`` directories a ``{a,b,…}``
+    glob finds, read typed by ``_LINEAGE_DDL`` (past 32 directories Spark
+    adds a parallel listing job). A ``_lineage`` that is
+    missing, holds no data file or holds only unreadable ones
+    (``ignoreCorruptFiles``) yields no row, so its stage is absent."""
+    fs, pattern = _hadoop_path(spark, f"{root}/{{{','.join(stages)}}}/_lineage")
+    dirs = [str(st.getPath()) for st in fs.globStatus(pattern) or []]
+    if not dirs:
+        return {}
+    rows = (
+        spark.read.schema(_LINEAGE_DDL)
+        .option("ignoreCorruptFiles", "true")
+        .parquet(*dirs)
+        .collect()
+    )
+    return {r["stage"]: r.asDict() for r in rows}
+
+
 def read_lineage(spark: SparkSession, root: str, stage: str) -> dict | None:
     """The stage's lineage record, or None if never (fully) written."""
-    try:
-        row = spark.read.parquet(f"{root}/{stage}/_lineage").first()
-    except Exception:
-        return None
-    return row.asDict() if row is not None else None
+    return read_lineages(spark, root, [stage]).get(stage)
 
 
-def read_stage(spark: SparkSession, root: str, stage: str) -> DataFrame:
+def read_stage(
+    spark: SparkSession, root: str, stage: str, schema: str | None = None
+) -> DataFrame:
+    """The stage's data; ``schema`` (the lineage row's ``schema`` JSON)
+    types the read, so it starts no job before an action."""
     cat = _iceberg_catalog(spark)
     if cat is not None:
         return spark.read.table(f"{cat}.{root}.{stage}")
-    return spark.read.parquet(data_path(root, stage))
+    reader = spark.read
+    if schema is not None:
+        reader = reader.schema(StructType.fromJson(json.loads(schema)))
+    return reader.parquet(data_path(root, stage))
 
 
 def read_metrics(spark: SparkSession, root: str, stage: str) -> DataFrame:
-    return spark.read.parquet(f"{root}/{stage}/_metrics")
+    return spark.read.schema(_METRICS_DDL).parquet(f"{root}/{stage}/_metrics")

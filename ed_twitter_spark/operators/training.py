@@ -528,6 +528,10 @@ def run_train_epochs(
     fp_prev = _input_stat_sig(sf_dir)
     import time
 
+    kinds = ["ent_vecs", "train_loss"] + (["gsq"] if optimizer == "adagrad" else [])
+    lineages = kgio.read_lineages(
+        spark, root, [f"{pfx}{k}_ep_{e}" for e in range(1, n_epochs + 1) for k in kinds]
+    ) if resume else {}
     for epoch in range(1, n_epochs + 1):
         vec_stage = f"{pfx}ent_vecs_ep_{epoch}"
         loss_stage = f"{pfx}train_loss_ep_{epoch}"
@@ -536,15 +540,14 @@ def run_train_epochs(
             vec_stage, EPOCH_STAGE_VERSION, optimizer, sf_dir, fp_prev
         )
         fp_prev = fp
-        stages = [vec_stage, loss_stage] + (
-            [gsq_stage] if optimizer == "adagrad" else []
-        )
-        lins = [kgio.read_lineage(spark, root, s) if resume else None for s in stages]
-        if all(lin is not None and lin["fingerprint"] == fp for lin in lins):
-            comp = kgio.read_stage(spark, root, vec_stage)
+        recs = {k: lineages.get(f"{pfx}{k}_ep_{epoch}") for k in kinds}
+        if all(rec is not None and rec["fingerprint"] == fp for rec in recs.values()):
+            comp = kgio.read_stage(spark, root, vec_stage, recs["ent_vecs"]["schema"])
             if optimizer == "adagrad":
-                gstate = kgio.read_stage(spark, root, gsq_stage)
-            losses.append(kgio.read_stage(spark, root, loss_stage))
+                gstate = kgio.read_stage(spark, root, gsq_stage, recs["gsq"]["schema"])
+            losses.append(
+                kgio.read_stage(spark, root, loss_stage, recs["train_loss"]["schema"])
+            )
             continue
         t0 = time.time()
         ev = _ent_init_vecs(
@@ -592,7 +595,7 @@ def run_train_epochs(
                     6,
                 ).alias("val"),
             )
-            kgio.write_stage(
+            rec = kgio.write_stage(
                 grad.select("ent_name", "dim", "gsq"),
                 root,
                 gsq_stage,
@@ -600,11 +603,11 @@ def run_train_epochs(
                 [],
                 started_at=t0,
             )
-            gstate = kgio.read_stage(spark, root, gsq_stage)
-        kgio.write_stage(upd, root, vec_stage, fp, [], started_at=t0)
-        kgio.write_stage(loss, root, loss_stage, fp, [vec_stage], started_at=t0)
-        comp = kgio.read_stage(spark, root, vec_stage)
-        losses.append(kgio.read_stage(spark, root, loss_stage))
+            gstate = kgio.read_stage(spark, root, gsq_stage, rec["schema"])
+        rec = kgio.write_stage(upd, root, vec_stage, fp, [], started_at=t0)
+        comp = kgio.read_stage(spark, root, vec_stage, rec["schema"])
+        rec = kgio.write_stage(loss, root, loss_stage, fp, [vec_stage], started_at=t0)
+        losses.append(kgio.read_stage(spark, root, loss_stage, rec["schema"]))
 
     out = losses[0]
     for extra in losses[1:]:

@@ -12,6 +12,13 @@ ours adds fingerprint invalidation: a re-run stage re-runs exactly its
 downstream suffix, and the code version is a digest of the package sources
 (:data:`CODE_VERSION`), so a checkpoint built by other code is never reused.
 
+Deciding what to rebuild costs one Spark job: :func:`run_pipeline` reads the
+lineage rows of all stages in one typed read (:func:`io.read_lineages`), so a
+full resume runs exactly that job. A stage whose lineage sidecar is missing,
+partial or corrupt counts as absent and rebuilds with its descendants. A
+rebuilt stage reads its inputs typed by the schemas their lineage rows
+record, so loading a checkpoint starts no schema-inference job.
+
 Stage boundaries double as shuffle barriers: transcripts and kb_alias scan
 the raw input once each; windows/triples shuffle on conv_id; components is
 the iterative CC loop; vertices/edges are broadcast-side joins. At 10^12
@@ -144,15 +151,22 @@ def run_pipeline(
     """Execute the DAG; returns {stage: lineage record + 'skipped' flag}.
 
     ``resume=False`` rebuilds everything; ``force`` invalidates the named
-    stages (and, via fingerprints, their descendants).
+    stages (and, via fingerprints, their descendants) and must name stages
+    of :data:`STAGES`. All lineage rows are read in one job up front; each
+    rebuilt stage reads its inputs typed by their recorded schemas.
     """
+    names = [st.name for st in STAGES]
+    unknown = sorted(set(force) - set(names))
+    if unknown:
+        raise ValueError(f"force names unknown stages {unknown}; stages are {names}")
+    lineages = kgio.read_lineages(spark, root, names) if resume else {}
     results: dict[str, dict] = {}
     fps: dict[str, str] = {}
     rebuilt: set[str] = set()
     for st in STAGES:
         fp = kgio.fingerprint(st.name, st.version, sf_dir, *(fps[d] for d in st.deps))
         fps[st.name] = fp
-        lineage = kgio.read_lineage(spark, root, st.name) if resume else None
+        lineage = lineages.get(st.name)
         must_run = (
             lineage is None
             or lineage["fingerprint"] != fp
@@ -165,7 +179,7 @@ def run_pipeline(
             results[st.name] = {**lineage, "skipped": True}
             continue
         rebuilt.add(st.name)
-        inputs = {d: kgio.read_stage(spark, root, d) for d in st.deps}
+        inputs = {d: kgio.read_stage(spark, root, d, results[d]["schema"]) for d in st.deps}
         t0 = time.time()
         df = st.build(spark, sf_dir, inputs)
         record = kgio.write_stage(df, root, st.name, fp, list(st.deps), started_at=t0)

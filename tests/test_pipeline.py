@@ -2,6 +2,10 @@
 
 from __future__ import annotations
 
+import os
+import shutil
+
+import pytest
 from conftest import SF_SMOKE
 
 from ed_twitter_spark import io as kgio
@@ -33,6 +37,99 @@ def test_pipeline_runs_resumes_and_invalidates(spark, tmp_path):
     for st in ("candidates", "triples", "components", "vertices", "edges"):
         assert not r3[st]["skipped"], st
         assert r3[st]["rows"] == r1[st]["rows"], st
+
+
+def test_force_rejects_unknown_stage_names(spark, tmp_path):
+    """A misspelt ``force`` name used to force nothing; now it fails
+    before any stage runs."""
+    root = str(tmp_path / "ckpt")
+    with pytest.raises(ValueError, match="triple"):
+        run_pipeline(spark, SF_SMOKE, root, force=("triple",))
+    with pytest.raises(ValueError):
+        run_pipeline(spark, SF_SMOKE, root, force="triples")  # a str, not a tuple
+    assert not os.path.exists(root)
+
+
+def _rebuilt(results: dict[str, dict]) -> set[str]:
+    return {n for n, rec in results.items() if not rec["skipped"]}
+
+
+def test_resume_rebuilds_exactly_the_broken_stages(spark, tmp_path, monkeypatch):
+    """A stage counts as complete only once its lineage row is written: a
+    crash after the data and before the lineage, a lineage write that died
+    in ``_temporary/`` and a corrupt lineage file each rebuild that stage
+    and its descendants, and nothing upstream."""
+    root = str(tmp_path / "ckpt")
+    real = kgio._write_rows
+
+    def crash_on_triples_lineage(spark, ddl, rows, path):
+        if path == f"{root}/triples/_lineage":
+            raise RuntimeError("killed before the lineage row")
+        real(spark, ddl, rows, path)
+
+    after_triples = {"triples", "components", "vertices", "edges"}
+    with monkeypatch.context() as m:
+        m.setattr(kgio, "_write_rows", crash_on_triples_lineage)
+        with pytest.raises(RuntimeError, match="killed"):
+            run_pipeline(spark, SF_SMOKE, root)
+    assert os.listdir(kgio.data_path(root, "triples"))  # the data did land
+    assert _rebuilt(run_pipeline(spark, SF_SMOKE, root)) == after_triples
+
+    # the same crash while overwriting a complete stage: its old lineage
+    # must not vouch for the new, possibly partial, data
+    with monkeypatch.context() as m:
+        m.setattr(kgio, "_write_rows", crash_on_triples_lineage)
+        with pytest.raises(RuntimeError, match="killed"):
+            run_pipeline(spark, SF_SMOKE, root, force=("triples",))
+    assert _rebuilt(run_pipeline(spark, SF_SMOKE, root)) == after_triples
+
+    # a lineage write that died before its commit: only _temporary/ is left
+    lineage = f"{root}/components/_lineage"
+    shutil.rmtree(lineage)
+    os.makedirs(f"{lineage}/_temporary/0")
+    with open(f"{lineage}/_temporary/0/part-00000.parquet", "wb") as f:
+        f.write(b"half a file")
+    assert _rebuilt(run_pipeline(spark, SF_SMOKE, root)) == {"components", "vertices", "edges"}
+
+    # a lineage directory holding a garbage part file
+    lineage = f"{root}/vertices/_lineage"
+    shutil.rmtree(lineage)
+    os.makedirs(lineage)
+    with open(f"{lineage}/part-00000-garbage.snappy.parquet", "wb") as f:
+        f.write(b"not a parquet file")
+    assert _rebuilt(run_pipeline(spark, SF_SMOKE, root)) == {"vertices"}
+    assert _rebuilt(run_pipeline(spark, SF_SMOKE, root)) == set()
+
+
+def test_full_resume_is_one_spark_job(spark, tmp_path):
+    """Deciding that nothing needs rebuilding is one typed read of every
+    lineage row, and a stage read typed by its recorded schema starts no
+    job before an action."""
+    import uuid
+
+    root = str(tmp_path / "ckpt")
+    run_pipeline(spark, SF_SMOKE, root)
+    sc = spark.sparkContext
+
+    def jobs_of(fn):
+        group = f"jobs-{uuid.uuid4()}"
+        sc.setJobGroup(group, "job count")
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    results, n_jobs = jobs_of(lambda: run_pipeline(spark, SF_SMOKE, root))
+    assert all(rec["skipped"] for rec in results.values())
+    assert n_jobs == 1
+
+    schema = results["triples"]["schema"]
+    df, n_jobs = jobs_of(lambda: kgio.read_stage(spark, root, "triples", schema=schema))
+    assert n_jobs == 0
+    assert df.schema.json() == schema
+    assert df.count() == results["triples"]["rows"]
 
 
 def test_stage_versions_are_the_source_digest(spark, tmp_path, monkeypatch):

@@ -26,12 +26,17 @@ def main():
         from ed_twitter_spark.session import get_spark
 
         spark = get_spark("pipeline_bench")
+        sc = spark.sparkContext
         t0 = time.time()
         r1 = run_pipeline(spark, sf_dir, root)
         cold = time.time() - t0
+        sc.setJobGroup("resume", "full resume")
         t0 = time.time()
         r2 = run_pipeline(spark, sf_dir, root)
         warm = time.time() - t0
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        resume_jobs = len(sc.statusTracker().getJobIdsForGroup("resume"))
         t0 = time.time()
         r3 = run_pipeline(spark, sf_dir, root, force=("triples",))
         mid = time.time() - t0
@@ -61,13 +66,18 @@ descendants.
 | scenario | wall (s) |
 |---|---|
 | cold end-to-end | {cold:.1f} |
-| resume, everything checkpointed | {warm:.2f} |
+| resume, everything checkpointed (Spark jobs: {resume_jobs}) | {warm:.2f} |
 | forced re-run of `triples` (+ descendants) | {mid:.1f} |
+
+Host: {os.cpu_count()} cores, Spark `{sc.master}`.
 
 Regenerate: `python tools/pipeline_bench.py {sf_dir}`
 """
             )
-        print(f"cold={cold:.1f}s resume={warm:.2f}s forced-mid={mid:.1f}s -> BENCH/PIPELINE.md")
+        print(
+            f"cold={cold:.1f}s resume={warm:.2f}s ({resume_jobs} jobs) forced-mid={mid:.1f}s"
+            " -> BENCH/PIPELINE.md"
+        )
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
