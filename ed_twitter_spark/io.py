@@ -1,35 +1,33 @@
-"""Checkpoint catalog: Iceberg-or-Parquet stage tables + lineage/metrics rows.
+"""Checkpoint catalog: Iceberg-or-Parquet stage tables + one lineage record each.
 
 The north rule (BASELINE.json:6,14) requires every pipeline stage to
-checkpoint per-partition state with **lineage + metrics rows** so a run can
+checkpoint per-partition state with **lineage + metrics** so a run can
 resume mid-pipeline. This sandbox has no Iceberg runtime jar, so the catalog
-is abstracted (SURVEY.md §7): when an Iceberg catalog is configured on the
+is abstracted (SURVEY.md §7): with an Iceberg catalog configured on the
 session we write via ``df.writeTo(catalog.db.name).createOrReplace()``;
-otherwise each stage is a Parquet directory with two sidecar tables of
-identical schema/semantics:
+otherwise each stage is a Parquet directory. The bookkeeping is one JSON
+file that the driver writes and reads through the session's Hadoop
+``FileSystem``, at no Spark job:
 
-* ``<root>/<stage>/data/``        — the stage output
-* ``<root>/<stage>/_metrics/``    — one row **per output partition**
-  (stage, partition_id, rows) plus a totals row (partition_id = -1)
-* ``<root>/<stage>/_lineage/``    — one row per write: stage, fingerprint
-  (stage version + input fingerprints + sf_dir), dep list, schema JSON,
-  row count, wall seconds, written_at
+* ``<root>/<stage>/data/``          — the stage output
+* ``<root>/<stage>/_lineage.json``  — one record per write: stage,
+  fingerprint (stage version + input fingerprints + sf_dir), dep list,
+  schema JSON, rows, wall seconds, written_at, and ``partitions``: the
+  ``[partition_id, rows]`` pairs of the data as persisted
 
-Resume contract: a stage is *complete* iff its lineage row exists and its
-recorded fingerprint equals the fingerprint recomputed from the current code
-version and the fingerprints of its (possibly re-run) inputs. Any upstream
-change therefore invalidates exactly the downstream suffix of the DAG.
-:func:`read_lineages` reads the lineage rows of every stage a run needs in
-one typed read (one Spark job, no schema inference), and a sidecar that is
-missing, partial (a write that died in ``_temporary/``) or corrupt counts as
-an absent stage. ``write_stage`` deletes the stage's old lineage before it
-writes the data and writes the new row last, so a write killed at any point
-leaves the stage absent rather than complete over partial data.
+Resume contract: a stage is *complete* iff its record exists and its
+fingerprint equals the one recomputed from the current code version and the
+fingerprints of its (possibly re-run) inputs, so any upstream change
+invalidates exactly the downstream suffix of the DAG. A full resume runs no
+Spark job (:func:`read_lineages`: one glob, one file read per stage). A
+record that is missing, truncated, unparsable, fails its checksum or names
+another stage counts as an absent stage. ``write_stage`` deletes the old
+record before it writes the data and writes the new one last, so a write
+killed at any point leaves the stage absent, not complete over partial data.
 
-Catalog reads are typed, so none starts a schema-inference job: the
-sidecars by their DDL, a stage's data by the schema its lineage row records
-(``read_stage(..., schema=)``), and ``write_stage``'s re-read of what it
-wrote by the schema of the frame written.
+Stage reads are always typed, so none starts a schema-inference job:
+:func:`read_stage` by the schema the record holds (it raises on a stage with
+no committed record), ``write_stage``'s re-read by the frame's own schema.
 
 The reference's analog is its torch.save memo-cache of parsed indexes
 (`deep-ed-pytorch/entities/ent_name2id_freq/ent_name_id.py:41-48,93`,
@@ -40,10 +38,12 @@ stale stage.
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
 import json
 import time
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -71,24 +71,15 @@ def data_path(root: str, stage: str) -> str:
     return f"{root}/{stage}/data"
 
 
-# sidecar schemas; _lineage's columns are in name order, the order existing
-# checkpoints were written in
-_METRICS_DDL = "stage string, partition_id int, rows bigint"
-_LINEAGE_DDL = (
-    "deps string, fingerprint string, rows bigint, schema string, stage string,"
-    " wall_s double, written_at string"
-)
+def _record_path(root: str, stage: str) -> str:
+    return f"{root}/{stage}/_lineage.json"
 
 
-def _write_rows(spark: SparkSession, ddl: str, rows: list[dict], path: str) -> None:
-    """Write a few driver-side rows, typed by ``ddl``, as JVM literals:
-    createDataFrame on a Python list ships it through the Python serializer
-    as a parallelized RDD, which costs more than the job that made them."""
-    cols = [c.split() for c in ddl.split(",")]
-    structs = [F.struct(*(F.lit(r[n]).cast(t).alias(n) for n, t in cols)) for r in rows]
-    spark.range(1, numPartitions=1).select(F.inline(F.array(*structs))).write.mode(
-        "overwrite"
-    ).parquet(path)
+def _write_record(spark: SparkSession, path: str, record: dict) -> None:
+    """Write ``record`` as JSON from the driver (no Spark job)."""
+    fs, p = _hadoop_path(spark, path)
+    with contextlib.closing(fs.create(p, True)) as out:
+        spark._jvm.org.apache.commons.io.IOUtils.write(json.dumps(record), out, "UTF-8")
 
 
 def write_stage(
@@ -99,17 +90,17 @@ def write_stage(
     deps: list[str],
     started_at: float,
 ) -> dict:
-    """Materialize a stage: data + per-partition metrics + lineage row.
+    """Materialize a stage: data, then its lineage record.
 
     ``started_at`` is the wall-clock when the stage's build began; the
-    recorded wall_s spans build + execution + write. Returns the lineage
-    record (also written as a 1-row table).
+    recorded wall_s spans build + execution + write. Returns the record
+    (also written as ``_lineage.json``).
     """
     spark = df.sparkSession
-    # the lineage row is the commit marker: drop the old one first, so a
-    # write that dies before the new row lands leaves the stage absent
-    fs, lineage = _hadoop_path(spark, f"{root}/{stage}/_lineage")
-    fs.delete(lineage, True)
+    # the record is the commit marker: drop the old one first, so a write
+    # that dies before the new record lands leaves the stage absent
+    fs, record_path = _hadoop_path(spark, _record_path(root, stage))
+    fs.delete(record_path, False)
     cat = _iceberg_catalog(spark)
     if cat is not None:
         df.writeTo(f"{cat}.{root}.{stage}").createOrReplace()
@@ -118,34 +109,26 @@ def write_stage(
         df.write.mode("overwrite").parquet(data_path(root, stage))
         written = spark.read.schema(df.schema).parquet(data_path(root, stage))
 
-    # per-partition metrics over the data *as persisted* (scan partitioning):
-    # one aggregation job whose result is at most one row per scan
-    # partition; the totals row is summed from those collected rows, so an
-    # *empty* stage still records its (stage, -1, 0) row — empty-but-complete
+    # per-partition row counts over the data *as persisted* (scan
+    # partitioning), in one aggregation job; the total is their sum, so an
+    # *empty* stage still records rows=0 — empty-but-complete
     part_rows = (
         written.groupBy(F.spark_partition_id().alias("partition_id"))
         .agg(F.count(F.lit(1)).alias("rows"))
         .collect()
     )
-    n_rows = sum(r["rows"] for r in part_rows)
-    metrics = sorted([(r["partition_id"], r["rows"]) for r in part_rows] + [(-1, n_rows)])
-    _write_rows(
-        spark,
-        _METRICS_DDL,
-        [{"stage": stage, "partition_id": pid, "rows": n} for pid, n in metrics],
-        f"{root}/{stage}/_metrics",
-    )
-
+    partitions = sorted([r["partition_id"], r["rows"]] for r in part_rows)
     record = {
         "stage": stage,
         "fingerprint": fp,
         "deps": json.dumps(deps),
         "schema": written.schema.json(),
-        "rows": n_rows,
+        "rows": sum(n for _, n in partitions),
         "wall_s": round(time.time() - started_at, 3),
         "written_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+        "partitions": partitions,
     }
-    _write_rows(spark, _LINEAGE_DDL, [record], f"{root}/{stage}/_lineage")
+    _write_record(spark, _record_path(root, stage), record)
     return record
 
 
@@ -165,23 +148,24 @@ def write_partitioned(
 
 
 def read_lineages(spark: SparkSession, root: str, stages: list[str]) -> dict[str, dict]:
-    """``{stage: lineage record}`` for every named stage that was fully
-    written, in one Spark job: the ``_lineage`` directories a ``{a,b,…}``
-    glob finds, read typed by ``_LINEAGE_DDL`` (past 32 directories Spark
-    adds a parallel listing job). A ``_lineage`` that is
-    missing, holds no data file or holds only unreadable ones
-    (``ignoreCorruptFiles``) yields no row, so its stage is absent."""
-    fs, pattern = _hadoop_path(spark, f"{root}/{{{','.join(stages)}}}/_lineage")
-    dirs = [str(st.getPath()) for st in fs.globStatus(pattern) or []]
-    if not dirs:
-        return {}
-    rows = (
-        spark.read.schema(_LINEAGE_DDL)
-        .option("ignoreCorruptFiles", "true")
-        .parquet(*dirs)
-        .collect()
-    )
-    return {r["stage"]: r.asDict() for r in rows}
+    """``{stage: lineage record}`` of every named stage fully written, read on
+    the driver (one ``globStatus`` over ``{a,b,…}/_lineage.json``, one file
+    read each). An unreadable record, or one naming another stage, is left
+    out: its stage is absent."""
+    fs, pattern = _hadoop_path(spark, _record_path(root, f"{{{','.join(stages)}}}"))
+    to_string = spark._jvm.org.apache.commons.io.IOUtils.toString
+    records = {}
+    for status in fs.globStatus(pattern) or []:
+        path = status.getPath()
+        stage = path.getParent().getName()
+        try:
+            with contextlib.closing(fs.open(path)) as stream:
+                record = json.loads(to_string(stream, "UTF-8"))
+        except (Py4JJavaError, ValueError):
+            continue
+        if isinstance(record, dict) and record.get("stage") == stage:
+            records[stage] = record
+    return records
 
 
 def read_lineage(spark: SparkSession, root: str, stage: str) -> dict | None:
@@ -189,19 +173,34 @@ def read_lineage(spark: SparkSession, root: str, stage: str) -> dict | None:
     return read_lineages(spark, root, [stage]).get(stage)
 
 
-def read_stage(
-    spark: SparkSession, root: str, stage: str, schema: str | None = None
-) -> DataFrame:
-    """The stage's data; ``schema`` (the lineage row's ``schema`` JSON)
-    types the read, so it starts no job before an action."""
+def _committed(spark: SparkSession, root: str, stage: str) -> dict:
+    record = read_lineage(spark, root, stage)
+    if record is None:
+        raise FileNotFoundError(f"stage {stage!r} under {root} has no committed lineage record")
+    return record
+
+
+def read_stage(spark: SparkSession, root: str, stage: str) -> DataFrame:
+    """The stage's data, typed by its record's schema (no inference job);
+    ``FileNotFoundError`` on a stage with no committed record."""
     cat = _iceberg_catalog(spark)
     if cat is not None:
         return spark.read.table(f"{cat}.{root}.{stage}")
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(StructType.fromJson(json.loads(schema)))
-    return reader.parquet(data_path(root, stage))
+    schema = StructType.fromJson(json.loads(_committed(spark, root, stage)["schema"]))
+    return spark.read.schema(schema).parquet(data_path(root, stage))
 
 
 def read_metrics(spark: SparkSession, root: str, stage: str) -> DataFrame:
-    return spark.read.schema(_METRICS_DDL).parquet(f"{root}/{stage}/_metrics")
+    """``(stage, partition_id, rows)`` per output partition plus a totals row
+    (``partition_id = -1``), from the record as JVM literals: ``createDataFrame``
+    would ship them through the Python serializer as a parallelized RDD."""
+    record = _committed(spark, root, stage)
+    structs = [
+        F.struct(
+            F.lit(stage).alias("stage"),
+            F.lit(pid).cast("int").alias("partition_id"),
+            F.lit(n).cast("bigint").alias("rows"),
+        )
+        for pid, n in sorted(record["partitions"] + [[-1, record["rows"]]])
+    ]
+    return spark.range(1, numPartitions=1).select(F.inline(F.array(*structs)))

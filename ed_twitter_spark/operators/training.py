@@ -482,8 +482,8 @@ def run_train_epochs(
     positive/slot/negative probes (suffix-salted md5, mirroring the fresh
     minibatch sampling per epoch) and takes one deterministic full-batch
     step. Each epoch's vectors AND loss row are materialized through the
-    S10 checkpoint machinery (`io.write_stage` — data + metrics + lineage
-    row, the analog of ``ent_vecs__ep_{k}``, `learn_a.py:199-208`): the
+    S10 checkpoint machinery (`io.write_stage` — data + lineage record,
+    the analog of ``ent_vecs__ep_{k}``, `learn_a.py:199-208`): the
     boundary truncates lineage (the epoch-k plan never re-executes inside
     epoch k+1), and a killed run resumes at the first epoch whose recorded
     fingerprint is missing or stale.
@@ -540,14 +540,12 @@ def run_train_epochs(
             vec_stage, EPOCH_STAGE_VERSION, optimizer, sf_dir, fp_prev
         )
         fp_prev = fp
-        recs = {k: lineages.get(f"{pfx}{k}_ep_{epoch}") for k in kinds}
-        if all(rec is not None and rec["fingerprint"] == fp for rec in recs.values()):
-            comp = kgio.read_stage(spark, root, vec_stage, recs["ent_vecs"]["schema"])
+        recs = [lineages.get(f"{pfx}{k}_ep_{epoch}") for k in kinds]
+        if all(rec is not None and rec["fingerprint"] == fp for rec in recs):
+            comp = kgio.read_stage(spark, root, vec_stage)
             if optimizer == "adagrad":
-                gstate = kgio.read_stage(spark, root, gsq_stage, recs["gsq"]["schema"])
-            losses.append(
-                kgio.read_stage(spark, root, loss_stage, recs["train_loss"]["schema"])
-            )
+                gstate = kgio.read_stage(spark, root, gsq_stage)
+            losses.append(kgio.read_stage(spark, root, loss_stage))
             continue
         t0 = time.time()
         ev = _ent_init_vecs(
@@ -595,7 +593,7 @@ def run_train_epochs(
                     6,
                 ).alias("val"),
             )
-            rec = kgio.write_stage(
+            kgio.write_stage(
                 grad.select("ent_name", "dim", "gsq"),
                 root,
                 gsq_stage,
@@ -603,11 +601,11 @@ def run_train_epochs(
                 [],
                 started_at=t0,
             )
-            gstate = kgio.read_stage(spark, root, gsq_stage, rec["schema"])
-        rec = kgio.write_stage(upd, root, vec_stage, fp, [], started_at=t0)
-        comp = kgio.read_stage(spark, root, vec_stage, rec["schema"])
-        rec = kgio.write_stage(loss, root, loss_stage, fp, [vec_stage], started_at=t0)
-        losses.append(kgio.read_stage(spark, root, loss_stage, rec["schema"]))
+            gstate = kgio.read_stage(spark, root, gsq_stage)
+        kgio.write_stage(upd, root, vec_stage, fp, [], started_at=t0)
+        comp = kgio.read_stage(spark, root, vec_stage)
+        kgio.write_stage(loss, root, loss_stage, fp, [vec_stage], started_at=t0)
+        losses.append(kgio.read_stage(spark, root, loss_stage))
 
     out = losses[0]
     for extra in losses[1:]:

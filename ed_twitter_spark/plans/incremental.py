@@ -79,11 +79,12 @@ def _snap_dirs(state_path: str) -> list[int]:
 
 
 def read_state(spark: SparkSession, state_path: str) -> DataFrame:
-    """Latest state snapshot, or an empty state if none published yet."""
+    """Latest state snapshot, read typed (no schema-inference job), or an
+    empty state if none published yet."""
     snaps = _snap_dirs(state_path)
     if not snaps:
         return spark.createDataFrame([], _STATE_SCHEMA)
-    return spark.read.parquet(f"{state_path}/snap={snaps[-1]}")
+    return spark.read.schema(_STATE_SCHEMA).parquet(f"{state_path}/snap={snaps[-1]}")
 
 
 def merge_state(

@@ -1,8 +1,8 @@
 """Resumable staged KG pipeline: the spark-submit entry for a real cluster.
 
 The end-to-end dataflow (SURVEY.md §3.3 "Spark lifecycle equivalent") as an
-explicit DAG of checkpointed stages. Each stage writes data + per-partition
-metrics + a lineage row through :mod:`ed_twitter_spark.io`; on re-run a stage
+explicit DAG of checkpointed stages. Each stage writes its data and a lineage
+record through :mod:`ed_twitter_spark.io`; on re-run a stage
 whose recorded fingerprint still matches (code version + sf_dir + input
 fingerprints) is **skipped** and loaded from its checkpoint, so a run killed
 mid-pipeline resumes at the first incomplete stage (north rule,
@@ -12,12 +12,12 @@ ours adds fingerprint invalidation: a re-run stage re-runs exactly its
 downstream suffix, and the code version is a digest of the package sources
 (:data:`CODE_VERSION`), so a checkpoint built by other code is never reused.
 
-Deciding what to rebuild costs one Spark job: :func:`run_pipeline` reads the
-lineage rows of all stages in one typed read (:func:`io.read_lineages`), so a
-full resume runs exactly that job. A stage whose lineage sidecar is missing,
-partial or corrupt counts as absent and rebuilds with its descendants. A
-rebuilt stage reads its inputs typed by the schemas their lineage rows
-record, so loading a checkpoint starts no schema-inference job.
+Deciding what to rebuild runs no Spark job: :func:`run_pipeline` reads the
+lineage records of all stages on the driver (:func:`io.read_lineages`), so a
+full resume runs no job at all. A stage whose record is missing, truncated,
+corrupt or another stage's counts as absent and rebuilds with its
+descendants. A rebuilt stage reads its inputs typed by the schemas their
+records hold, so loading a checkpoint starts no schema-inference job.
 
 Stage boundaries double as shuffle barriers: transcripts and kb_alias scan
 the raw input once each; windows/triples shuffle on conv_id; components is
@@ -152,8 +152,8 @@ def run_pipeline(
 
     ``resume=False`` rebuilds everything; ``force`` invalidates the named
     stages (and, via fingerprints, their descendants) and must name stages
-    of :data:`STAGES`. All lineage rows are read in one job up front; each
-    rebuilt stage reads its inputs typed by their recorded schemas.
+    of :data:`STAGES`. All lineage records are read up front on the driver;
+    each rebuilt stage reads its inputs typed by their recorded schemas.
     """
     names = [st.name for st in STAGES]
     unknown = sorted(set(force) - set(names))
@@ -179,7 +179,7 @@ def run_pipeline(
             results[st.name] = {**lineage, "skipped": True}
             continue
         rebuilt.add(st.name)
-        inputs = {d: kgio.read_stage(spark, root, d, results[d]["schema"]) for d in st.deps}
+        inputs = {d: kgio.read_stage(spark, root, d) for d in st.deps}
         t0 = time.time()
         df = st.build(spark, sf_dir, inputs)
         record = kgio.write_stage(df, root, st.name, fp, list(st.deps), started_at=t0)

@@ -82,7 +82,7 @@ def run_ingest_to_stage(
     """``foreachBatch`` handoff into the checkpointed batch catalog: each
     micro-batch of watermark-deduped turns lands via :func:`io.write_stage`
     as its own stage (``stream_turns_b<batch_id>``) with the same
-    lineage + per-partition metrics rows the batch pipeline writes — the
+    lineage record the batch pipeline writes — the
     stream and batch paths share one storage contract. The streaming
     checkpoint makes redelivered batches replay idempotently (same
     batch_id → same stage dir, overwritten not duplicated).

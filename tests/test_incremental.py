@@ -101,3 +101,19 @@ def test_state_snapshots_are_versioned(spark, day_layout):
     _, _, state_path = day_layout
     # all three snapshots remain readable (time travel); latest is served
     assert _snap_dirs(state_path) == [1, 2, 3]
+
+
+def test_read_state_is_typed(spark, tmp_path):
+    """The snapshot read is typed by ``_STATE_SCHEMA``: it starts no job
+    before an action."""
+    from conftest import jobs_of
+
+    from ed_twitter_spark.plans.incremental import _STATE_SCHEMA, merge_state, read_state
+
+    state_path = str(tmp_path / "state")
+    typed = spark.createDataFrame([("e", "c", 2, 0.5)], _STATE_SCHEMA)
+    assert merge_state(spark, state_path, typed) == 1
+    df, n_jobs = jobs_of(spark, lambda: read_state(spark, state_path))
+    assert n_jobs == 0
+    assert df.schema == typed.schema
+    assert [tuple(r) for r in df.collect()] == [("e", "c", 2, 0.5)]

@@ -1,4 +1,4 @@
-"""Checkpoint/resume pipeline: lineage fingerprints, metrics rows, resume."""
+"""Checkpoint/resume pipeline: lineage records, per-partition metrics, resume."""
 
 from __future__ import annotations
 
@@ -6,7 +6,7 @@ import os
 import shutil
 
 import pytest
-from conftest import SF_SMOKE
+from conftest import SF_SMOKE, jobs_of
 
 from ed_twitter_spark import io as kgio
 from ed_twitter_spark.plans.pipeline import STAGES, run_pipeline
@@ -55,81 +55,116 @@ def _rebuilt(results: dict[str, dict]) -> set[str]:
 
 
 def test_resume_rebuilds_exactly_the_broken_stages(spark, tmp_path, monkeypatch):
-    """A stage counts as complete only once its lineage row is written: a
-    crash after the data and before the lineage, a lineage write that died
-    in ``_temporary/`` and a corrupt lineage file each rebuild that stage
-    and its descendants, and nothing upstream."""
+    """A stage counts as complete only once its lineage record is written:
+    a crash after the data and before the record, a truncated, garbage or
+    empty record and another stage's record each rebuild that stage and its
+    descendants, and nothing upstream."""
     root = str(tmp_path / "ckpt")
-    real = kgio._write_rows
+    real = kgio._write_record
 
-    def crash_on_triples_lineage(spark, ddl, rows, path):
-        if path == f"{root}/triples/_lineage":
-            raise RuntimeError("killed before the lineage row")
-        real(spark, ddl, rows, path)
+    def record(stage):
+        return f"{root}/{stage}/_lineage.json"
+
+    def crc(stage):
+        return f"{root}/{stage}/._lineage.json.crc"
+
+    def crash_on_triples_record(spark, path, rec):
+        if path == record("triples"):
+            raise RuntimeError("killed before the lineage record")
+        real(spark, path, rec)
 
     after_triples = {"triples", "components", "vertices", "edges"}
     with monkeypatch.context() as m:
-        m.setattr(kgio, "_write_rows", crash_on_triples_lineage)
+        m.setattr(kgio, "_write_record", crash_on_triples_record)
         with pytest.raises(RuntimeError, match="killed"):
             run_pipeline(spark, SF_SMOKE, root)
     assert os.listdir(kgio.data_path(root, "triples"))  # the data did land
     assert _rebuilt(run_pipeline(spark, SF_SMOKE, root)) == after_triples
 
-    # the same crash while overwriting a complete stage: its old lineage
+    # the same crash while overwriting a complete stage: its old record
     # must not vouch for the new, possibly partial, data
     with monkeypatch.context() as m:
-        m.setattr(kgio, "_write_rows", crash_on_triples_lineage)
+        m.setattr(kgio, "_write_record", crash_on_triples_record)
         with pytest.raises(RuntimeError, match="killed"):
             run_pipeline(spark, SF_SMOKE, root, force=("triples",))
     assert _rebuilt(run_pipeline(spark, SF_SMOKE, root)) == after_triples
 
-    # a lineage write that died before its commit: only _temporary/ is left
-    lineage = f"{root}/components/_lineage"
-    shutil.rmtree(lineage)
-    os.makedirs(f"{lineage}/_temporary/0")
-    with open(f"{lineage}/_temporary/0/part-00000.parquet", "wb") as f:
-        f.write(b"half a file")
+    # a record cut short, without its checksum: the JSON parse fails
+    with open(record("components"), "r+b") as f:
+        f.truncate(os.path.getsize(record("components")) // 2)
+    os.remove(crc("components"))
+    assert kgio.read_lineage(spark, root, "components") is None
     assert _rebuilt(run_pipeline(spark, SF_SMOKE, root)) == {"components", "vertices", "edges"}
 
-    # a lineage directory holding a garbage part file
-    lineage = f"{root}/vertices/_lineage"
-    shutil.rmtree(lineage)
-    os.makedirs(lineage)
-    with open(f"{lineage}/part-00000-garbage.snappy.parquet", "wb") as f:
-        f.write(b"not a parquet file")
+    # a garbage record under its stale checksum: the checksum fails
+    with open(record("vertices"), "wb") as f:
+        f.write(b'{"stage": "vertices", "garbage": true}')
+    assert kgio.read_lineage(spark, root, "vertices") is None
+    assert _rebuilt(run_pipeline(spark, SF_SMOKE, root)) == {"vertices"}
+
+    # a zero-byte record
+    open(record("edges"), "wb").close()
+    assert kgio.read_lineage(spark, root, "edges") is None
+    assert _rebuilt(run_pipeline(spark, SF_SMOKE, root)) == {"edges"}
+
+    # another stage's valid record, checksum and all
+    shutil.copy(record("edges"), record("vertices"))
+    shutil.copy(crc("edges"), crc("vertices"))
+    assert kgio.read_lineage(spark, root, "vertices") is None
+    assert kgio.read_lineages(spark, root, ["vertices", "edges"]).keys() == {"edges"}
     assert _rebuilt(run_pipeline(spark, SF_SMOKE, root)) == {"vertices"}
     assert _rebuilt(run_pipeline(spark, SF_SMOKE, root)) == set()
 
 
-def test_full_resume_is_one_spark_job(spark, tmp_path):
-    """Deciding that nothing needs rebuilding is one typed read of every
-    lineage row, and a stage read typed by its recorded schema starts no
-    job before an action."""
-    import uuid
-
+def test_full_resume_starts_no_spark_job(spark, tmp_path):
+    """Deciding that nothing needs rebuilding reads every lineage record on
+    the driver, and a stage read is typed by its recorded schema: neither
+    starts a job before an action."""
     root = str(tmp_path / "ckpt")
     run_pipeline(spark, SF_SMOKE, root)
-    sc = spark.sparkContext
 
-    def jobs_of(fn):
-        group = f"jobs-{uuid.uuid4()}"
-        sc.setJobGroup(group, "job count")
-        try:
-            out = fn()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-    results, n_jobs = jobs_of(lambda: run_pipeline(spark, SF_SMOKE, root))
+    results, n_jobs = jobs_of(spark, lambda: run_pipeline(spark, SF_SMOKE, root))
     assert all(rec["skipped"] for rec in results.values())
-    assert n_jobs == 1
+    assert n_jobs == 0
 
     schema = results["triples"]["schema"]
-    df, n_jobs = jobs_of(lambda: kgio.read_stage(spark, root, "triples", schema=schema))
+    df, n_jobs = jobs_of(spark, lambda: kgio.read_stage(spark, root, "triples"))
     assert n_jobs == 0
     assert df.schema.json() == schema
     assert df.count() == results["triples"]["rows"]
+
+
+def test_catalog_bookkeeping_runs_no_spark_job(spark, tmp_path):
+    """``write_stage`` runs the data write and the per-partition count (3
+    jobs for a narrow frame); reading the record, the typed data and the
+    metrics frame back starts none. A stage with no committed record
+    cannot be read."""
+    import time
+
+    root = str(tmp_path / "ckpt")
+    narrow = spark.range(100).selectExpr("id AS x", "CAST(id AS STRING) AS y")
+    kgio.write_stage(narrow, root, "warmup", fp="f0", deps=[], started_at=time.time())
+    rec, n_jobs = jobs_of(
+        spark, lambda: kgio.write_stage(narrow, root, "narrow", "f0", [], started_at=time.time())
+    )
+    assert n_jobs == 3
+    assert sum(n for _, n in rec["partitions"]) == rec["rows"] == 100
+
+    recs, n_jobs = jobs_of(spark, lambda: kgio.read_lineages(spark, root, ["narrow", "warmup"]))
+    assert n_jobs == 0 and recs["narrow"] == rec
+    df, n_jobs = jobs_of(spark, lambda: kgio.read_stage(spark, root, "narrow"))
+    assert n_jobs == 0 and df.schema.json() == rec["schema"]
+    m, n_jobs = jobs_of(spark, lambda: kgio.read_metrics(spark, root, "narrow"))
+    assert n_jobs == 0
+    assert sorted(tuple(r) for r in m.collect()) == sorted(
+        [("narrow", -1, 100)] + [("narrow", pid, n) for pid, n in rec["partitions"]]
+    )
+
+    os.remove(f"{root}/narrow/_lineage.json")
+    with pytest.raises(FileNotFoundError, match="narrow"):
+        kgio.read_stage(spark, root, "narrow")
+    with pytest.raises(FileNotFoundError, match="never_written"):
+        kgio.read_stage(spark, root, "never_written")
 
 
 def test_stage_versions_are_the_source_digest(spark, tmp_path, monkeypatch):

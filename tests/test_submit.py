@@ -71,4 +71,4 @@ def test_spark_submit_py_files_pipeline(tmp_path):
     ran = [l for l in proc.stdout.splitlines() if l.startswith(("RUN ", "SKIP"))]
     assert len(ran) == 8, proc.stdout[-2000:]
     # final stage checkpointed with lineage on disk
-    assert os.path.exists(os.path.join(ckpt_root, "edges", "_lineage"))
+    assert os.path.exists(os.path.join(ckpt_root, "edges", "_lineage.json"))

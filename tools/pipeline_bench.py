@@ -46,10 +46,11 @@ def main():
             f.write(
                 f"""# BENCH — checkpoint/resume pipeline at `{sf_dir}`
 
-Every stage writes data + per-partition metrics rows + a lineage
-fingerprint (ed_twitter_spark/io.py); a re-run skips stages whose
-fingerprint still matches and re-runs a forced stage plus all its
-descendants.
+Every stage writes its data and one lineage record, `_lineage.json`
+(fingerprint, schema, rows and per-partition row counts), which the driver
+writes and reads without a Spark job (ed_twitter_spark/io.py); a re-run
+skips stages whose fingerprint still matches and re-runs a forced stage
+plus all its descendants.
 
 | stage | rows | wall (s) | resume skips? | re-runs on force('triples')? |
 |---|---|---|---|---|
