@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ed_twitter_spark.session import arrow_frame
+
 
 # Below this many (distinct, symmetrized) edges the whole graph fits on the
 # driver and a local union-find beats O(diameter) rounds of shuffle jobs by
@@ -112,8 +114,11 @@ def connected_components(
         labels = _local_union_find(pairs)
         if stats is not None:
             stats["rounds"] = 0
-        return spark.createDataFrame(
-            sorted(labels.items()), schema="node string, component string"
+        nodes = sorted(labels)
+        return arrow_frame(
+            spark,
+            {"node": nodes, "component": [labels[n] for n in nodes]},
+            "node string, component string",
         )
     if algorithm == "star":
         return _star_components(dedup, max_iter, stats)

@@ -23,6 +23,13 @@ partitioning modulo chunk salt — the chunk key also bounds LBP memory, which
 is O(M²·C²)); stage 2 is a broadcast join (no shuffle) while the KB fits,
 and a salted shuffle join that splits head mentions when it does not.
 Viral conversations are bounded by chunking.
+
+Each task of stages 1 and 3 also pays a fixed cost in its Python worker,
+whatever its rows. Forked from Spark's default daemon, a reused worker
+spent about 300 ms of CPU per task on a 4-core host, re-reading Spark's
+archives on its import path and collecting every imported pandas and
+pyarrow object. Forked from ``ed_twitter_spark.daemon`` (``session.py``)
+it spends about 30 ms, so more, smaller partitions cost little extra.
 """
 
 from __future__ import annotations

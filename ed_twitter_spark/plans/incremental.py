@@ -37,9 +37,12 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ed_twitter_spark.session import arrow_frame
+
 _STATE_SCHEMA = (
     "obj string, conv_id string, n_links bigint, score_sum double"
 )
+_STATE_COLUMNS = ("obj", "conv_id", "n_links", "score_sum")
 
 
 def day_turns(spark: SparkSession, turns_path: str, dt: str) -> DataFrame:
@@ -80,10 +83,10 @@ def _snap_dirs(state_path: str) -> list[int]:
 
 def read_state(spark: SparkSession, state_path: str) -> DataFrame:
     """Latest state snapshot, read typed (no schema-inference job), or an
-    empty state if none published yet."""
+    empty state built JVM-side if none published yet."""
     snaps = _snap_dirs(state_path)
     if not snaps:
-        return spark.createDataFrame([], _STATE_SCHEMA)
+        return arrow_frame(spark, dict.fromkeys(_STATE_COLUMNS, []), _STATE_SCHEMA)
     return spark.read.schema(_STATE_SCHEMA).parquet(f"{state_path}/snap={snaps[-1]}")
 
 

@@ -5,17 +5,68 @@ settings we would ship to a 1000-executor cluster: AQE on (runtime join
 re-selection + skew-join splitting), Arrow enabled for all pandas UDF
 exchange, explicit shuffle-partition sizing, and UTC session time so
 timestamp semantics are engine-independent.
+
+Python workers. Outside spark-submit the session forks its Python workers
+from ``ed_twitter_spark.daemon`` (Spark's ``spark.python.daemon.module``)
+instead of ``pyspark.daemon``. Spark starts the daemon with ``pyspark.zip``,
+the py4j zip and the spark-core jar first on ``sys.path``, and PySpark calls
+``importlib.invalidate_caches()`` before every task, which makes each cached
+``zipimporter`` re-read its archive; after every task a reused worker runs
+``gc.collect()`` over every pandas and pyarrow object it imported. On a
+4-core host (``local[4]``) an empty 64-partition ``mapInPandas`` took 4.9 s
+and 19 s of CPU, about 300 ms per task, against 0.2 s for the same job on
+the JVM alone. The daemon drops the archives when an unpacked pyspark and
+py4j of the same versions are importable, imports the UDF stack once and
+freezes it out of the collector, then runs ``pyspark.daemon``; workers fork
+from it warm and share those pages, and the same job takes 1.1 s and 2.0 s
+of CPU (about 30 ms per task). It falls back to Spark's
+default daemon whenever it cannot be sure: under spark-submit (the gateway
+port is set; executors may run elsewhere, with the package shipped as
+``--py-files``), when the workers' start-up path would not import this
+package, and, inside the daemon, when the unpacked versions differ from the
+archives'.
+
+Driver-built frames go to the JVM as Arrow (``arrow_frame``): a pickled
+Python RDD would start a second daemon and four more workers for them.
 """
 
 from __future__ import annotations
 
 import os
+from importlib.machinery import PathFinder
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Arrow batch size bounds per-batch memory of the embedding kernels
 # (reference batches per-document; we batch per Arrow chunk).
 ARROW_BATCH = 4096
+
+DAEMON_MODULE = f"{__package__}.daemon"
+_PKG_DIR = os.path.dirname(os.path.abspath(__file__))
+_PKG_PARENT = os.path.dirname(_PKG_DIR)
+
+
+def worker_imports_package(path: list[str]) -> bool:
+    """Whether a worker whose ``sys.path`` starts with ``path`` imports this
+    very package (so ``python -m`` can run its daemon module)."""
+    spec = PathFinder.find_spec(__package__, path)
+    return (
+        spec is not None
+        and spec.origin is not None
+        and os.path.dirname(os.path.abspath(spec.origin)) == _PKG_DIR
+    )
+
+
+def arrow_frame(spark: SparkSession, columns: dict[str, list], schema: str) -> DataFrame:
+    """Driver-side ``columns`` as a frame the JVM builds from Arrow batches.
+
+    ``createDataFrame`` of a Python list, or of an empty pandas frame (which
+    skips Arrow), ships the rows as a pickled Python RDD whose read starts
+    Python workers; an Arrow table has no such path, empty or not.
+    """
+    import pyarrow as pa
+
+    return spark.createDataFrame(pa.table(columns), schema)
 
 
 def get_spark(
@@ -50,6 +101,15 @@ def get_spark(
         builder = builder.master(f"local[{cores}]").config(
             "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g")
         )
+        # Workers start with the driver's working directory first on their
+        # path, then PYTHONPATH: put this package's parent there, so UDFs
+        # and the daemon import it from any working directory.
+        worker_path = [_PKG_PARENT] + [
+            p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p
+        ]
+        os.environ["PYTHONPATH"] = os.pathsep.join(dict.fromkeys(worker_path))
+        if worker_imports_package([os.getcwd(), *worker_path]):
+            builder = builder.config("spark.python.daemon.module", DAEMON_MODULE)
     builder = (
         builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.session.timeZone", "UTC")

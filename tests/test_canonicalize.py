@@ -75,6 +75,23 @@ def test_cc_disjoint_components(spark):
     _check(spark, edges)
 
 
+def test_cc_edge_free_input_is_typed_empty_without_python_workers(spark):
+    """No edges: the driver path returns an empty ``(node string, component
+    string)`` frame built JVM-side; reading it runs no Spark job, so no
+    Python worker (an empty pandas frame would skip Arrow and go pickled)."""
+    from conftest import jobs_of
+
+    edges = spark.range(0).selectExpr("cast(id as string) src", "cast(id as string) dst")
+    stats = {}
+    cc = connected_components(edges, stats=stats)
+    assert stats["rounds"] == 0
+    assert cc.schema.simpleString() == "struct<node:string,component:string>"
+    rows, n_jobs = jobs_of(spark, cc.collect)
+    assert rows == []
+    assert n_jobs == 0
+    assert "PythonRDD" not in cc._jdf.queryExecution().toRdd().toDebugString()
+
+
 def test_star_beats_hashmin_on_chain(spark):
     """The alternating large-/small-star contraction must produce the same
     labels as hash-min on a path graph while converging in O(log n) rounds

@@ -117,3 +117,19 @@ def test_read_state_is_typed(spark, tmp_path):
     assert n_jobs == 0
     assert df.schema == typed.schema
     assert [tuple(r) for r in df.collect()] == [("e", "c", 2, 0.5)]
+
+
+def test_empty_state_starts_no_python_worker(spark, tmp_path):
+    """With no snapshot yet, the state is an empty frame typed by
+    ``_STATE_SCHEMA`` that the JVM builds: reading it runs no Spark job, so
+    no task and no Python worker (a pickled Python RDD ran four)."""
+    from conftest import jobs_of
+
+    from ed_twitter_spark.plans.incremental import _STATE_SCHEMA, read_state
+
+    empty = read_state(spark, str(tmp_path / "state"))
+    assert empty.schema == spark.createDataFrame([], _STATE_SCHEMA).schema
+    rows, n_jobs = jobs_of(spark, empty.collect)
+    assert rows == []
+    assert n_jobs == 0
+    assert "PythonRDD" not in empty._jdf.queryExecution().toRdd().toDebugString()
