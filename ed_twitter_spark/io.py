@@ -82,6 +82,18 @@ def _write_record(spark: SparkSession, path: str, record: dict) -> None:
         spark._jvm.org.apache.commons.io.IOUtils.write(json.dumps(record), out, "UTF-8")
 
 
+def _read_record(fs, path, to_string):
+    """The JSON record at Hadoop ``path`` of ``fs``, read on the driver (no
+    Spark job) by commons-io's ``IOUtils.toString``, passed as ``to_string``:
+    its py4j lookup costs more than reading a small record, so a loop looks
+    it up once. None if the record is missing or unparsable."""
+    try:
+        with contextlib.closing(fs.open(path)) as stream:
+            return json.loads(to_string(stream, "UTF-8"))
+    except (Py4JJavaError, ValueError):
+        return None
+
+
 def write_stage(
     df: DataFrame,
     root: str,
@@ -132,6 +144,10 @@ def write_stage(
     return record
 
 
+def _schema_path(path: str) -> str:
+    return f"{path}/_schema.json"
+
+
 def write_partitioned(
     df: DataFrame, path: str, partition_cols: list[str]
 ) -> None:
@@ -143,8 +159,26 @@ def write_partitioned(
     never opens non-matching files, which is the difference between reading
     one day and reading 100 TB. The pruning is asserted in the plan audit
     (``PartitionFilters`` on the FileScan, `tests/test_plans.py`).
+
+    After the data, the table's read schema (data columns, then partition
+    columns typed as Spark infers them from the directory names) is written
+    as ``<path>/_schema.json``; Spark skips files whose names start with
+    ``_``. :func:`read_partitioned` types its read by it.
     """
     df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
+    spark = df.sparkSession
+    _write_record(spark, _schema_path(path), spark.read.parquet(path).schema.jsonValue())
+
+
+def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
+    """The partitioned table at ``path``, typed by its ``_schema.json``
+    record (no schema-inference job); a table with no readable record is
+    read with inference."""
+    fs, p = _hadoop_path(spark, _schema_path(path))
+    record = _read_record(fs, p, spark._jvm.org.apache.commons.io.IOUtils.toString)
+    if record is None:
+        return spark.read.parquet(path)
+    return spark.read.schema(StructType.fromJson(record)).parquet(path)
 
 
 def read_lineages(spark: SparkSession, root: str, stages: list[str]) -> dict[str, dict]:
@@ -158,11 +192,7 @@ def read_lineages(spark: SparkSession, root: str, stages: list[str]) -> dict[str
     for status in fs.globStatus(pattern) or []:
         path = status.getPath()
         stage = path.getParent().getName()
-        try:
-            with contextlib.closing(fs.open(path)) as stream:
-                record = json.loads(to_string(stream, "UTF-8"))
-        except (Py4JJavaError, ValueError):
-            continue
+        record = _read_record(fs, path, to_string)
         if isinstance(record, dict) and record.get("stage") == stage:
             records[stage] = record
     return records

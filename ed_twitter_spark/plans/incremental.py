@@ -7,22 +7,32 @@ incremental path instead:
 
 1. reads ONLY the new ``dt=`` partition (directory pruning — the scan
    never opens prior days' files; asserted via PartitionFilters in
-   ``tests/test_incremental.py``),
+   ``tests/test_incremental.py``), typed by the table's ``_schema.json``
+   record (``io.read_partitioned``), so a day starts no schema-inference
+   job over the whole table,
 2. links just that day's turns into triples,
-3. folds the day's *partial aggregates* into a persistent state table.
+3. folds the day's non-NIL link rows into a persistent state table.
 
 The state is kept at ``(obj, conv_id)`` granularity — the finest key any
 downstream statistic needs — so every statistic derived from it is a pure
 re-aggregation and the fold is associative: ``merge(merge(s, d1), d2) ==
 merge(s, d1 ∪ d2)``. COUNT DISTINCT conv_id (not distributive on its own)
 becomes a plain COUNT over the state key. The state table is entity-sized
-(vertex-table scale), not turn-sized, so each daily merge shuffles only
-|delta partials| + |state| rows.
+(vertex-table scale), not turn-sized. A day's link rows enter the fold as
+state rows (``n_links = 1``), so the day shuffles once, on the state key:
+Spark's partial aggregation above the union combines them map-side, and the
+exchange carries about |day partials| + |state| rows. A day runs three Spark
+jobs: the KB broadcast, that shuffle and the write.
 
 State snapshots are versioned directories (``snap=N``): parquet cannot
 overwrite a path that is an input of the same job, and versioning gives
 atomic publish + time travel (the poor man's Iceberg snapshot; with an
-Iceberg catalog configured this becomes ``MERGE INTO``).
+Iceberg catalog configured this becomes ``MERGE INTO``). Only committed
+snapshots (those holding the ``_SUCCESS`` marker) are served: a fold killed
+mid-write leaves a ``snap=N`` with no marker, which :func:`read_state`
+skips and :func:`merge_state` numbers past. Snapshots are listed through
+the session's Hadoop ``FileSystem``, so a state path may be a URI
+(``file://``, ``hdfs://``, ``s3a://``).
 
 The reference has no incremental path — it recomputes every TSV from
 scratch per run (`deep-ed-pytorch/run_all.sh:22-36`); this module is the
@@ -31,12 +41,12 @@ scale-mandated replacement for that rebuild-the-world loop.
 
 from __future__ import annotations
 
-import os
 import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ed_twitter_spark.io import _hadoop_path, read_partitioned
 from ed_twitter_spark.session import arrow_frame
 
 _STATE_SCHEMA = (
@@ -49,16 +59,20 @@ def day_turns(spark: SparkSession, turns_path: str, dt: str) -> DataFrame:
     """The day's slice of the partitioned fact table.
 
     The ``dt`` equality lands in the FileScan's PartitionFilters — whole
-    non-matching day directories are skipped at planning time.
+    non-matching day directories are skipped at planning time. The read is
+    typed by the table's schema record when ``io.write_partitioned`` wrote
+    one, else inferred.
     """
-    return spark.read.parquet(turns_path).where(F.col("dt") == dt)
+    return read_partitioned(spark, turns_path).where(F.col("dt") == dt)
 
 
 def day_partials(triples_df: DataFrame) -> DataFrame:
-    """(obj, conv_id, n_links, score_sum) partial aggregates for one day.
+    """(obj, conv_id, n_links, score_sum) partial aggregates of triples.
 
-    One map-side-combined aggregation over the day's triples; output is
-    bounded by (entities × conversations-touched-today).
+    One map-side-combined aggregation; output is bounded by (entities ×
+    conversations touched). This is the one-shot and serving path
+    (``entity_stats`` over a whole table or a built KG's edges);
+    ``ingest_day`` folds link rows into the state directly instead.
     """
     return (
         triples_df.where(F.col("obj") != "NIL")
@@ -70,49 +84,70 @@ def day_partials(triples_df: DataFrame) -> DataFrame:
     )
 
 
-def _snap_dirs(state_path: str) -> list[int]:
-    if not os.path.isdir(state_path):
-        return []
+def day_links(triples_df: DataFrame) -> DataFrame:
+    """The non-NIL triples as state rows: (obj, conv_id, n_links = 1,
+    score_sum = score), not aggregated."""
+    return triples_df.where(F.col("obj") != "NIL").select(
+        "obj",
+        "conv_id",
+        F.lit(1).cast("bigint").alias("n_links"),
+        F.col("score").cast("double").alias("score_sum"),
+    )
+
+
+def _snap_dirs(spark: SparkSession, state_path: str, committed: bool = False) -> list[int]:
+    """Sorted versions of the ``snap=N`` directories under ``state_path``,
+    listed through Hadoop; with ``committed``, only those holding a
+    ``_SUCCESS`` marker."""
+    fs, pattern = _hadoop_path(spark, f"{state_path}/snap=*" + ("/_SUCCESS" if committed else ""))
     out = []
-    for name in os.listdir(state_path):
-        m = re.fullmatch(r"snap=(\d+)", name)
+    for status in fs.globStatus(pattern) or []:
+        path = status.getPath()
+        m = re.fullmatch(r"snap=(\d+)", (path.getParent() if committed else path).getName())
         if m:
             out.append(int(m.group(1)))
     return sorted(out)
 
 
 def read_state(spark: SparkSession, state_path: str) -> DataFrame:
-    """Latest state snapshot, read typed (no schema-inference job), or an
-    empty state built JVM-side if none published yet."""
-    snaps = _snap_dirs(state_path)
+    """Latest committed state snapshot, read typed (no schema-inference
+    job), or an empty state built JVM-side if none is committed yet."""
+    snaps = _snap_dirs(spark, state_path, committed=True)
     if not snaps:
         return arrow_frame(spark, dict.fromkeys(_STATE_COLUMNS, []), _STATE_SCHEMA)
     return spark.read.schema(_STATE_SCHEMA).parquet(f"{state_path}/snap={snaps[-1]}")
 
 
-def merge_state(
-    spark: SparkSession, state_path: str, partials: DataFrame
-) -> int:
-    """Fold one day's partials into the state; returns the new version.
-
-    Union + re-aggregate on the state key: conversations spanning ingest
-    days merge their per-day counts here, which is what keeps the fold
-    order-insensitive. The write goes to a NEW ``snap=N+1`` directory —
-    the old snapshot stays readable until the write completes (atomic
-    publish, no read-write cycle on one path).
-    """
-    snaps = _snap_dirs(state_path)
-    version = (snaps[-1] if snaps else 0) + 1
-    merged = (
+def fold_state(spark: SparkSession, state_path: str, rows: DataFrame) -> DataFrame:
+    """The latest committed state with ``rows`` folded in: union +
+    re-aggregate on the state key, one shuffle."""
+    return (
         read_state(spark, state_path)
-        .unionByName(partials)
+        .unionByName(rows)
         .groupBy("obj", "conv_id")
         .agg(
             F.sum("n_links").alias("n_links"),
             F.sum("score_sum").alias("score_sum"),
         )
     )
-    merged.write.mode("errorifexists").parquet(f"{state_path}/snap={version}")
+
+
+def merge_state(spark: SparkSession, state_path: str, rows: DataFrame) -> int:
+    """Fold ``rows`` into the state; returns the new version.
+
+    ``rows`` are in the state schema: ``day_partials`` output or
+    ``day_links``' unaggregated link rows. Union + re-aggregate on the state
+    key: conversations spanning ingest days merge their per-day counts
+    here, which is what keeps the fold order-insensitive. The write goes to
+    a NEW ``snap=N`` directory, numbered past every existing one, committed
+    or not — the served snapshot stays readable until the write completes
+    (atomic publish, no read-write cycle on one path).
+    """
+    snaps = _snap_dirs(spark, state_path)
+    version = (snaps[-1] if snaps else 0) + 1
+    fold_state(spark, state_path, rows).write.mode("errorifexists").parquet(
+        f"{state_path}/snap={version}"
+    )
     return version
 
 
@@ -136,7 +171,8 @@ def ingest_day(
     dt: str,
     kb_df: DataFrame,
 ) -> int:
-    """One daily increment: prune-read → link → fold. Returns the version."""
+    """One daily increment: typed prune-read → link → fold, one shuffle.
+    Returns the version."""
     from ed_twitter_spark.operators.candidates import (
         gen_candidates,
         link_prior_argmax,
@@ -145,4 +181,4 @@ def ingest_day(
 
     turns = day_turns(spark, turns_path, dt)
     triples = link_prior_argmax(gen_candidates(detect_mentions(turns), kb_df))
-    return merge_state(spark, state_path, day_partials(triples))
+    return merge_state(spark, state_path, day_links(triples))
