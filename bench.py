@@ -168,13 +168,14 @@ def host_probe() -> dict:
     for _ in range(1_000_000):
         x = x * 1.0000001 + 1e-9
     spin_us = (time.perf_counter() - t0) * 1e6
+    ncpu = len(os.sched_getaffinity(0))  # what this process may run on
     return {
         "load_avg_1m": round(la1, 2),
         "load_avg_5m": round(la5, 2),
         "spin_1e6_us": round(spin_us, 1),
-        "ncpu": os.cpu_count(),
+        "ncpu": ncpu,
         # crude contention flag: queued work exceeds half the cores
-        "contended": bool(la1 > (os.cpu_count() or 1) / 2) or math.isnan(la1),
+        "contended": bool(la1 > ncpu / 2) or math.isnan(la1),
     }
 
 

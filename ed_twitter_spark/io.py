@@ -39,6 +39,7 @@ stale stage.
 from __future__ import annotations
 
 import contextlib
+import functools
 import hashlib
 import json
 import time
@@ -57,10 +58,39 @@ def _iceberg_catalog(spark: SparkSession) -> str | None:
     return None
 
 
+@functools.cache
+def _gateway_lookup(gateway, name: str):
+    return functools.reduce(getattr, name.split("."), gateway.jvm)
+
+
+def _jvm(spark: SparkSession, name: str):
+    """The JVM class or static method ``name`` (``"org.apache.hadoop.fs.Path"``),
+    looked up once per py4j gateway: the lookup through ``spark._jvm`` takes a
+    round trip per dotted part, about ten times the cost of a call on what it
+    returns. The gateway is the key, so a session restarted on a new gateway
+    never calls into a dead one."""
+    return _gateway_lookup(spark.sparkContext._gateway, name)
+
+
 def _hadoop_path(spark: SparkSession, path: str):
     """``(FileSystem, Path)`` for ``path`` under the session's Hadoop config."""
-    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    p = _jvm(spark, "org.apache.hadoop.fs.Path")(path)
     return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
+def _glob(spark: SparkSession, pattern: str) -> tuple:
+    """``(FileSystem, paths)``: the paths matching the Hadoop glob
+    ``pattern``, as strings, in four py4j calls whatever their number (a
+    step through a py4j array costs two round trips). Scala's
+    ``genericWrapArray`` takes the ``Path[]`` as an ``Object``, which py4j
+    passes; it will not pass it as an ``Object[]``."""
+    fs, p = _hadoop_path(spark, pattern)
+    statuses = fs.globStatus(p)
+    if statuses is None:  # a pattern with no wildcard that matched nothing
+        return fs, []
+    paths = _jvm(spark, "org.apache.hadoop.fs.FileUtil.stat2Paths")(statuses)
+    joined = _jvm(spark, "scala.Predef.genericWrapArray")(paths).mkString("\n")
+    return fs, joined.split("\n") if joined else []
 
 
 def fingerprint(*parts: str) -> str:
@@ -79,17 +109,15 @@ def _write_record(spark: SparkSession, path: str, record: dict) -> None:
     """Write ``record`` as JSON from the driver (no Spark job)."""
     fs, p = _hadoop_path(spark, path)
     with contextlib.closing(fs.create(p, True)) as out:
-        spark._jvm.org.apache.commons.io.IOUtils.write(json.dumps(record), out, "UTF-8")
+        _jvm(spark, "org.apache.commons.io.IOUtils.write")(json.dumps(record), out, "UTF-8")
 
 
-def _read_record(fs, path, to_string):
+def _read_record(spark: SparkSession, fs, path):
     """The JSON record at Hadoop ``path`` of ``fs``, read on the driver (no
-    Spark job) by commons-io's ``IOUtils.toString``, passed as ``to_string``:
-    its py4j lookup costs more than reading a small record, so a loop looks
-    it up once. None if the record is missing or unparsable."""
+    Spark job). None if the record is missing or unparsable."""
     try:
         with contextlib.closing(fs.open(path)) as stream:
-            return json.loads(to_string(stream, "UTF-8"))
+            return json.loads(_jvm(spark, "org.apache.commons.io.IOUtils.toString")(stream, "UTF-8"))
     except (Py4JJavaError, ValueError):
         return None
 
@@ -175,7 +203,7 @@ def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
     record (no schema-inference job); a table with no readable record is
     read with inference."""
     fs, p = _hadoop_path(spark, _schema_path(path))
-    record = _read_record(fs, p, spark._jvm.org.apache.commons.io.IOUtils.toString)
+    record = _read_record(spark, fs, p)
     if record is None:
         return spark.read.parquet(path)
     return spark.read.schema(StructType.fromJson(record)).parquet(path)
@@ -186,13 +214,11 @@ def read_lineages(spark: SparkSession, root: str, stages: list[str]) -> dict[str
     the driver (one ``globStatus`` over ``{a,b,…}/_lineage.json``, one file
     read each). An unreadable record, or one naming another stage, is left
     out: its stage is absent."""
-    fs, pattern = _hadoop_path(spark, _record_path(root, f"{{{','.join(stages)}}}"))
-    to_string = spark._jvm.org.apache.commons.io.IOUtils.toString
+    fs, paths = _glob(spark, _record_path(root, f"{{{','.join(stages)}}}"))
     records = {}
-    for status in fs.globStatus(pattern) or []:
-        path = status.getPath()
-        stage = path.getParent().getName()
-        record = _read_record(fs, path, to_string)
+    for path in paths:
+        stage = path.rsplit("/", 2)[-2]
+        record = _read_record(spark, fs, _jvm(spark, "org.apache.hadoop.fs.Path")(path))
         if isinstance(record, dict) and record.get("stage") == stage:
             records[stage] = record
     return records

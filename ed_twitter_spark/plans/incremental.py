@@ -46,7 +46,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ed_twitter_spark.io import _hadoop_path, read_partitioned
+from ed_twitter_spark.io import _glob, read_partitioned
 from ed_twitter_spark.session import arrow_frame
 
 _STATE_SCHEMA = (
@@ -99,11 +99,11 @@ def _snap_dirs(spark: SparkSession, state_path: str, committed: bool = False) ->
     """Sorted versions of the ``snap=N`` directories under ``state_path``,
     listed through Hadoop; with ``committed``, only those holding a
     ``_SUCCESS`` marker."""
-    fs, pattern = _hadoop_path(spark, f"{state_path}/snap=*" + ("/_SUCCESS" if committed else ""))
+    marker = "/_SUCCESS" if committed else ""
+    _, paths = _glob(spark, f"{state_path}/snap=*{marker}")
     out = []
-    for status in fs.globStatus(pattern) or []:
-        path = status.getPath()
-        m = re.fullmatch(r"snap=(\d+)", (path.getParent() if committed else path).getName())
+    for path in paths:
+        m = re.search(rf"/snap=(\d+){marker}$", path)
         if m:
             out.append(int(m.group(1)))
     return sorted(out)

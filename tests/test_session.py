@@ -1,8 +1,11 @@
-"""The Python worker runtime of a ``get_spark`` session.
+"""The runtime of a ``get_spark`` session: its driver JVM and its Python
+workers.
 
-Workers fork from ``ed_twitter_spark.daemon``: warm, with Spark's archives
-off their path and the imported stack frozen out of the collector. The
-package reaches them from any working directory, and driver-built frames
+The driver JVM starts with the C2 thresholds raised (``DRIVER_JIT_OPTIONS``),
+keeping a caller's own JVM options, and runs as many cores as the process
+may use. Workers fork from ``ed_twitter_spark.daemon``: warm, with Spark's
+archives off their path and the imported stack frozen out of the collector.
+The package reaches them from any working directory, and driver-built frames
 never start a second daemon.
 """
 
@@ -13,14 +16,81 @@ import json
 import os
 import subprocess
 import sys
+import types
 import zipfile
 
 import pytest
 from conftest import SF_SMOKE
 
 from ed_twitter_spark import daemon, session
+from ed_twitter_spark import io as kgio
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def test_driver_jvm_runs_the_compile_policy(spark):
+    jvm = spark._jvm
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    )
+    assert bean.getVMOption("Tier4InvocationThreshold").getValue() == "25000"
+
+
+_JVM_DRIVER = """\
+import json, os, sys
+sys.path.insert(0, {repo!r})
+from ed_twitter_spark.session import get_spark
+
+os.sched_setaffinity(0, {{min(os.sched_getaffinity(0))}})
+spark = get_spark("jvm-test", extra={{"spark.driver.extraJavaOptions": "-Xms512m"}})
+args = spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments()
+print("RESULT " + json.dumps({{"args": list(args), "parallelism": spark.sparkContext.defaultParallelism}}))
+"""
+
+
+@pytest.fixture(scope="module")
+def one_cpu_driver(tmp_path_factory):
+    """JVM input arguments and default parallelism of a fresh ``get_spark``
+    session with no core count given, a caller's ``extraJavaOptions``, and
+    its process pinned to one CPU."""
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CPUS"}
+    proc = subprocess.run(
+        [sys.executable, "-c", _JVM_DRIVER.format(repo=REPO)],
+        cwd=str(tmp_path_factory.mktemp("one_cpu")),
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    line = [l for l in proc.stdout.splitlines() if l.startswith("RESULT ")][-1]
+    return json.loads(line[len("RESULT ") :])
+
+
+def test_caller_java_options_keep_the_compile_policy(one_cpu_driver):
+    args = one_cpu_driver["args"]
+    policy = session.DRIVER_JIT_OPTIONS.split()
+    for opt in [*policy, "-Xms512m"]:
+        assert opt in args, (opt, args)
+    # the caller's options come last, so a caller can override the policy
+    assert args.index(policy[-1]) < args.index("-Xms512m")
+
+
+def test_default_cores_follow_cpu_affinity(one_cpu_driver):
+    assert one_cpu_driver["parallelism"] == 1
+
+
+def test_jvm_lookups_are_cached_per_gateway(spark):
+    path = kgio._jvm(spark, "org.apache.hadoop.fs.Path")
+    assert kgio._jvm(spark, "org.apache.hadoop.fs.Path") is path
+
+    # a new gateway is a new key: nothing looked up on an old one is reused
+    class Gateway:
+        def __init__(self, n):
+            self.jvm = types.SimpleNamespace(a=types.SimpleNamespace(B=n))
+
+    assert kgio._gateway_lookup(Gateway(1), "a.B") == 1
+    assert kgio._gateway_lookup(Gateway(2), "a.B") == 2
 
 
 def test_workers_fork_warm_from_the_package_daemon(spark):

@@ -1,7 +1,9 @@
 """Checkpoint-pipeline benchmark: cold run, full resume, forced mid-restart.
 
 Writes BENCH/PIPELINE.md with per-stage rows/wall and the three resume
-behaviors the north rule requires evidence for (BASELINE.json:6,14).
+behaviors the north rule requires evidence for (BASELINE.json:6,14), each
+with its wall time and the CPU time of the process tree (this process, the
+Spark JVM, the Python daemon and its workers).
 
 Usage: python tools/pipeline_bench.py [sf_dir]
 """
@@ -12,10 +14,11 @@ import os
 import shutil
 import sys
 import tempfile
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+from perfbench.procstat import CpuWall  # noqa: E402
 
 
 def main():
@@ -27,19 +30,16 @@ def main():
 
         spark = get_spark("pipeline_bench")
         sc = spark.sparkContext
-        t0 = time.time()
-        r1 = run_pipeline(spark, sf_dir, root)
-        cold = time.time() - t0
+        with CpuWall() as cold:
+            r1 = run_pipeline(spark, sf_dir, root)
         sc.setJobGroup("resume", "full resume")
-        t0 = time.time()
-        r2 = run_pipeline(spark, sf_dir, root)
-        warm = time.time() - t0
+        with CpuWall() as warm:
+            r2 = run_pipeline(spark, sf_dir, root)
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         resume_jobs = len(sc.statusTracker().getJobIdsForGroup("resume"))
-        t0 = time.time()
-        r3 = run_pipeline(spark, sf_dir, root, force=("triples",))
-        mid = time.time() - t0
+        with CpuWall() as mid:
+            r3 = run_pipeline(spark, sf_dir, root, force=("triples",))
 
         os.makedirs(f"{REPO}/BENCH", exist_ok=True)
         with open(f"{REPO}/BENCH/PIPELINE.md", "w") as f:
@@ -64,20 +64,22 @@ plus all its descendants.
                 )
             f.write(
                 f"""
-| scenario | wall (s) |
-|---|---|
-| cold end-to-end | {cold:.1f} |
-| resume, everything checkpointed (Spark jobs: {resume_jobs}) | {warm:.2f} |
-| forced re-run of `triples` (+ descendants) | {mid:.1f} |
+| scenario | wall (s) | CPU (s) |
+|---|---|---|
+| cold end-to-end | {cold.wall_s:.1f} | {cold.cpu_s:.1f} |
+| resume, everything checkpointed (Spark jobs: {resume_jobs}) | {warm.wall_s:.2f} | {warm.cpu_s:.2f} |
+| forced re-run of `triples` (+ descendants) | {mid.wall_s:.1f} | {mid.cpu_s:.1f} |
 
-Host: {os.cpu_count()} cores, Spark `{sc.master}`.
+CPU is user + system time of this process and everything below it.
+Host: {len(os.sched_getaffinity(0))} usable CPUs of {os.cpu_count()}, Spark `{sc.master}`.
 
 Regenerate: `python tools/pipeline_bench.py {sf_dir}`
 """
             )
         print(
-            f"cold={cold:.1f}s resume={warm:.2f}s ({resume_jobs} jobs) forced-mid={mid:.1f}s"
-            " -> BENCH/PIPELINE.md"
+            f"cold={cold.wall_s:.1f}s cpu={cold.cpu_s:.1f}s resume={warm.wall_s:.2f}s"
+            f" cpu={warm.cpu_s:.2f}s ({resume_jobs} jobs) forced-mid={mid.wall_s:.1f}s"
+            f" cpu={mid.cpu_s:.1f}s -> BENCH/PIPELINE.md"
         )
     finally:
         shutil.rmtree(root, ignore_errors=True)
